@@ -3335,7 +3335,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from orientdb_etl_spark.functions.bpe import bpe_train
 
     docs = _t(spark, sf_dir, "documents")
-    return bpe_train(docs, "text", num_merges=4, checkpoint_every=None)
+    return bpe_train(docs, "text", num_merges=4)
 
 
 def q_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7036,7 +7036,7 @@ def q_wordpiece_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from orientdb_etl_spark.functions.bpe import wordpiece_train
 
     docs = _t(spark, sf_dir, "documents")
-    return wordpiece_train(docs, "text", num_merges=4, checkpoint_every=None)
+    return wordpiece_train(docs, "text", num_merges=4)
 
 
 def _bitext_sides(spark: SparkSession, sf_dir: str):

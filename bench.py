@@ -836,7 +836,6 @@ def main() -> None:
     ).count()
 
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
-    # partial capture windows (merged later via tools/merge_bench_windows.py):
     # SPARK_GRAFT_BENCH_ONLY=q1,q3 runs just those headline entries;
     # SPARK_GRAFT_BENCH_FULL=1 runs the full 216-query surface (the
     # committed BENCH_local_r{N}.json artifact); the default is the CORE

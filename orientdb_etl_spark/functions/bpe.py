@@ -25,16 +25,19 @@ same greedy-left convention as the reference BPE implementation.
 Scale shape at 100 TB: the corpus is touched ONCE (token explode + word
 count); every merge step then runs over the WORD TABLE (vocabulary-sized,
 orders of magnitude smaller than the corpus — the classic BPE trick).
-Lineage grows linearly with merge count; ``checkpoint_every`` bounds it
-with ``localCheckpoint`` for large merge budgets.
+Lineage grows linearly with merge count; ``iterate.chain_cut`` bounds it.
 
 No counterpart in the reference; north-star extension per SURVEY §2.8.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from orientdb_etl_spark.functions.iterate import chain_cut
 
 
 def _symbol_bigrams(tok_arr_col: str) -> F.Column:
@@ -89,7 +92,6 @@ def bpe_train(
     text_col: str = "text",
     num_merges: int = 10,
     min_word_freq: int = 1,
-    checkpoint_every: int | None = 8,
 ) -> DataFrame:
     """Learn ``num_merges`` BPE merges; returns (step, pair, freq) —
     one row per merge in training order, ``pair`` the space-separated
@@ -133,12 +135,8 @@ def bpe_train(
             )
             .drop("_bp")
         )
-        if checkpoint_every and step % checkpoint_every == 0:
-            seqs = seqs.localCheckpoint(eager=False)
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.unionByName(m)
-    return out
+        seqs = chain_cut(seqs, step, num_merges)
+    return reduce(DataFrame.unionByName, merges)
 
 
 def bpe_segment(
@@ -186,7 +184,6 @@ def wordpiece_train(
     text_col: str = "text",
     num_merges: int = 10,
     min_word_freq: int = 1,
-    checkpoint_every: int | None = 8,
 ) -> DataFrame:
     """Learn ``num_merges`` WordPiece merges (Schuster & Nakajima,
     ICASSP'12; the BERT tokenizer's trainer): identical merge loop to
@@ -213,8 +210,8 @@ def wordpiece_train(
     full selection subtree (pair agg + two symbol joins) inside the
     next step's sequences, tripling the plan per step (4 merges ⇒ a
     4260-node physical plan whose AQE re-optimizations dominated the
-    runtime). ``checkpoint_every`` still bounds the (now linear)
-    lineage for large merge budgets. No counterpart in the reference
+    runtime). Training stops early, returning the completed steps, once
+    no word has two symbols left. No counterpart in the reference
     (OETLProcessor.java:252-283); §2.8 extension.
     """
     if num_merges <= 0:
@@ -270,7 +267,9 @@ def wordpiece_train(
         )
         if schema is None:
             schema = best.schema
-        row = best.collect()[0]  # 1 row by construction (limit 1)
+        row = best.first()  # None once no word has two symbols left
+        if row is None:
+            break
         rows.append(row)
         merged = row.pair.replace(" ", "")
         seqs = seqs.withColumn(
@@ -281,7 +280,6 @@ def wordpiece_train(
                 F.lit(f" {merged} "),
             ),
         )
-        if checkpoint_every and step % checkpoint_every == 0:
-            seqs = seqs.localCheckpoint(eager=False)
+        seqs = chain_cut(seqs, step, num_merges)
     base.unpersist()
     return spark.createDataFrame(rows, schema)

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from orientdb_etl_spark.functions.iterate import fixpoint
+
 
 def ensure_parallelism(
     df: DataFrame,
@@ -187,10 +189,6 @@ def _shingles_sql(col: str, k: int) -> str:
         f"transform(sequence(1, greatest(length({col}) - {k} + 1, 1)), "
         f"i -> substring({col}, i, {k}))"
     )
-
-
-def _shingles(col: str, k: int) -> F.Column:
-    return F.expr(_shingles_sql(col, k))
 
 
 def minhash_signatures(
@@ -484,9 +482,8 @@ def connected_component_labels(
     propagation whose round count is the component diameter (a
     pathological chain of near-dups — doc A ~ B ~ C ~ … — needs one round
     per hop there, but collapses geometrically here). Every round touches
-    only the PAIRS table (candidate collisions), never the corpus, and
-    ``localCheckpoint`` truncates the iterative lineage so the plan does
-    not grow with rounds.
+    only the PAIRS table (candidate collisions), never the corpus; the
+    loop is ``iterate.fixpoint``.
 
     ``max_iter`` is a hard cap with a CONVERGENCE ASSERTION: 25 doubling
     rounds cover any graph that fits in storage (2^25 diameter), so
@@ -501,39 +498,14 @@ def connected_component_labels(
     base = pairs.select(
         F.col("keep_id").alias("a"), F.col("dup_id").alias("b")
     ).localCheckpoint(eager=True)
-    edges = (
-        base.filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # star fixpoint: every edge points child→component-min, so a full
+    # round reproduces the (distinct) edge set exactly
+    edges = fixpoint(
+        base.filter(F.col("a") != F.col("b")).distinct(),
+        lambda e: _small_star(_large_star(e)),
+        max_iter,
+        "connected components (star contraction)",
     )
-    converged = edges.limit(1).count() == 0
-    for _ in range(max_iter):
-        if converged:
-            break
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        # star fixpoint: every edge already points child→component-min, so
-        # a full round reproduces the edge set exactly. One exact
-        # symmetric-difference job (both edge sets are distinct by
-        # construction, so an (a, b) group with a single source IS a
-        # difference) instead of two ExceptExec jobs per round.
-        changed = (
-            new_edges.withColumn("_s", F.lit(1))
-            .unionByName(edges.withColumn("_s", F.lit(2)))
-            .groupBy("a", "b")
-            .agg(F.countDistinct("_s").alias("_n"))
-            .filter(F.col("_n") == 1)
-            .limit(1)
-            .count()
-        )
-        edges = new_edges
-        if changed == 0:
-            converged = True
-    if not converged:
-        raise RuntimeError(
-            f"connected components did not converge in {max_iter} star "
-            "rounds — the pair graph is pathological (or max_iter was "
-            "lowered); refusing to return partially-merged clusters"
-        )
     roots = edges.select(F.col("b").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )

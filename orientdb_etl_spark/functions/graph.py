@@ -11,9 +11,9 @@ Scale shape: every iteration is one equi-join (ranks ⋈ edges on the
 out-vertex, shuffled on the join key) + one aggregation on the in-vertex —
 the standard join-agg PageRank on a distributed engine (the Pregel-style
 formulation of Malewicz et al., SIGMOD'10, expressed relationally).
-``localCheckpoint`` truncates lineage each iteration so the plan stays
-O(1) instead of O(iterations); at real scale the edge frame is the only
-large operand and it is shuffle-partitioned once on ``src`` and reused.
+Loops run on the shapes of :mod:`~orientdb_etl_spark.functions.iterate`;
+at real scale the edge frame is the only large operand and it is
+shuffle-partitioned once on ``src`` and reused.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from orientdb_etl_spark.context import PipelineContext
 from orientdb_etl_spark.functions.dedup import connected_component_labels
+from orientdb_etl_spark.functions.iterate import chain_cut, fixpoint
 from orientdb_etl_spark.operators import register
 
 __all__ = [
@@ -138,9 +139,9 @@ def pagerank(
     deterministic and avoids a per-iteration driver action. Each
     iteration's rank frame has exactly ONE consumer (the next
     iteration's contribution join), so iterations chain LAZILY into the
-    caller's single action; ``localCheckpoint`` cuts lineage only every
-    8 iterations to bound plan growth for large budgets (the edge and
-    node frames, consumed every iteration, keep their up-front cuts).
+    caller's single action, lineage cut by ``iterate.chain_cut`` (the
+    edge and node frames, consumed every iteration, keep their up-front
+    cuts).
 
     ``seeds`` (a 1-column ``id`` frame) switches to PERSONALIZED
     PageRank: teleport mass (1-d) flows only to the seed set (p(v) =
@@ -197,8 +198,7 @@ def pagerank(
                 + damping * F.coalesce(F.col("_in"), F.lit(0.0))
             ).alias("rank"),
         )
-        if it % 8 == 0 and it < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = chain_cut(ranks, it, iterations)
     return ranks
 
 
@@ -225,8 +225,6 @@ def connected_components_transformer(
     — (id, label) per vertex with label = component min, via the
     large-star/small-star contraction shared with the dedup survivor
     machinery (diameter-independent rounds)."""
-    from orientdb_etl_spark.functions.dedup import connected_component_labels
-
     pairs = df.select(
         F.col(cfg.get("src", "src")).alias("keep_id"),
         F.col(cfg.get("dst", "dst")).alias("dup_id"),
@@ -342,36 +340,29 @@ def kcore(
     Each round is one hash-aggregate (degrees) + two semi-joins (keep
     edges whose both endpoints survive) over the shrinking edge frame —
     all shuffled on the vertex key, so at cluster scale the edge frame
-    keeps one partitioning across rounds. ``localCheckpoint`` truncates
-    lineage; the loop exits when a round removes nothing (the fixpoint —
-    running further rounds is a no-op, which is what lets a
-    fixed-round unrolled oracle replay it, see :func:`kcore_rounds_sql`).
-    Random graphs converge in a handful of rounds; ``max_iter`` caps
-    adversarial chains.
+    keeps one partitioning across rounds. ``iterate.fixpoint`` exits
+    when a round removes nothing (further rounds are no-ops, which is
+    what lets a fixed-round unrolled oracle replay it, see
+    :func:`kcore_rounds_sql`); reaching ``max_iter`` raises, since a
+    partial peel is not a k-core.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    cur = symmetrize(edges, src, dst).localCheckpoint()
-    n_edges = cur.count()
-    for _ in range(int(max_iter)):
-        if n_edges == 0:
-            break
+
+    def peel(cur: DataFrame) -> DataFrame:
         keep = (
             cur.groupBy("src")
             .agg(F.count(F.lit(1)).alias("_deg"))
             .filter(F.col("_deg") >= k)
             .select(F.col("src").alias("_v"))
         )
-        nxt = (
+        return (
             cur.join(keep, cur["src"] == keep["_v"], "left_semi")
             .join(keep.select(F.col("_v").alias("_w")),
                   cur["dst"] == F.col("_w"), "left_semi")
-            .localCheckpoint()
         )
-        n_nxt = nxt.count()
-        if n_nxt == n_edges:
-            break
-        cur, n_edges = nxt, n_nxt
+
+    cur = fixpoint(symmetrize(edges, src, dst), peel, max_iter, "k-core peeling")
     return cur.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -452,15 +443,13 @@ def label_propagation(
     shuffled on the vertex key (the partitioning reuses across rounds),
     no window. Each round's label frame has exactly ONE consumer (the
     next round's join), so the rounds chain LAZILY into a single action
-    — no per-round job barrier; ``localCheckpoint`` cuts lineage only
-    every ``checkpoint_every`` rounds to bound plan growth for large
-    round budgets (the edge frame, consumed every round, keeps its
-    up-front cut). The symmetrized frame guarantees every node has ≥1
-    neighbor, so no keep-own-label outer join is needed.
+    — no per-round job barrier; ``iterate.chain_cut`` bounds the plan
+    for large round budgets (the edge frame, consumed every round,
+    keeps its up-front cut). The symmetrized frame guarantees every
+    node has ≥1 neighbor, so no keep-own-label outer join is needed.
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    checkpoint_every = 8
     ed = symmetrize(edges, src, dst).localCheckpoint()
     labels = ed.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -476,8 +465,7 @@ def label_propagation(
                 F.struct(F.col("_c"), (-F.col("label")).alias("_nl")),
             ).alias("label")
         )
-        if r % checkpoint_every == 0 and r < int(rounds):
-            labels = labels.localCheckpoint()
+        labels = chain_cut(labels, r, int(rounds))
     return labels
 
 
@@ -540,8 +528,9 @@ def weighted_sssp(
     hop count can be cheaper — so every round re-relaxes: one
     dist⋈edges equi-join on the vertex key, a union with the standing
     distances, and a min per vertex. All three shuffle on the vertex
-    key (one partitioning reused across rounds); ``localCheckpoint``
-    bounds lineage; the loop exits early once a round improves nothing.
+    key (one partitioning reused across rounds). ``iterate.fixpoint``
+    exits early once a round improves nothing; reaching ``rounds``
+    returns the ``rounds``-edge answer, not an error.
     Fixed synchronous rounds + min-fold determinism make the result a
     pure function of (graph, rounds) — replayable by
     :func:`sssp_rounds_sql`, the same contract as
@@ -552,42 +541,15 @@ def weighted_sssp(
     ed = edges.select(
         F.col(src).alias("_s"), F.col(dst).alias("_d"), F.col(weight).alias("_w")
     ).localCheckpoint()
-    dist = (
-        sources.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("bigint"))
-        .localCheckpoint()
-    )
-    for _ in range(int(rounds)):
-        relax = (
-            dist.join(ed, dist["id"] == ed["_s"])
-            .select(F.col("_d").alias("id"), (F.col("dist") + F.col("_w")).alias("dist"))
+
+    def relax(dist: DataFrame) -> DataFrame:
+        step = dist.join(ed, dist["id"] == ed["_s"]).select(
+            F.col("_d").alias("id"), (F.col("dist") + F.col("_w")).alias("dist")
         )
-        nxt = (
-            dist.unionByName(relax)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        # fixpoint check in ONE job (the connected-components sym-diff
-        # trick): nxt's id set always contains dist's and nxt.dist <=
-        # dist.dist per id, so the round improved nothing iff the two
-        # frames are IDENTICAL row sets — both sides are distinct by
-        # construction, so any (id, dist) row appearing on exactly one
-        # side is a change. Replaces the old two counts + occasional
-        # probe join per round.
-        changed = (
-            nxt.unionByName(dist)
-            .groupBy("id", "dist")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") == 1)
-            .limit(1)
-            .count()
-        )
-        dist = nxt
-        if changed == 0:
-            break
-    return dist
+        return dist.unionByName(step).groupBy("id").agg(F.min("dist").alias("dist"))
+
+    start = sources.select(F.col(id_col).alias("id")).distinct()
+    return fixpoint(start.withColumn("dist", F.lit(0).cast("bigint")), relax, rounds)
 
 
 def sssp_rounds_sql(rounds: int, edges_cte: str, sources_cte: str,
@@ -1086,14 +1048,12 @@ def _minlabel_fixpoint(
 ) -> DataFrame:
     """Min-label propagation along directed edges to a FIXED POINT:
     ``lab(u) = min(u, min over edges v->u of lab(v))`` iterated until no
-    label changes (each round: one equi-join + one grouped min, lineage
-    truncated per round). Returns ``(id, lab)`` where ``lab`` is the
-    minimum vertex id that can reach ``u``. Raises if ``max_rounds``
-    rounds don't converge — the same bounded-iteration discipline as
-    this module's other fixpoints, but asserted because :func:`scc`'s
-    correctness NEEDS the fixed point, not an approximation."""
-    lab = verts.select("id", F.col("id").alias("lab")).localCheckpoint()
-    for _ in range(int(max_rounds)):
+    label changes (each round: one equi-join + one grouped min, run by
+    ``iterate.fixpoint``). Returns ``(id, lab)`` where ``lab`` is the
+    minimum vertex id that can reach ``u``. Raises at ``max_rounds``,
+    because :func:`scc`'s correctness NEEDS the fixed point."""
+
+    def round_(lab: DataFrame) -> DataFrame:
         cand = (
             lab.join(edges, lab["id"] == edges["src"])
             .select(F.col("dst").alias("id"), "lab")
@@ -1109,26 +1069,19 @@ def _minlabel_fixpoint(
             ),
             "lab",
         ).select("id", F.col("_ll").alias("lab"))
-        new = (
+        return (
             lab.select("id", "lab")
             .unionByName(cand)
             .unionByName(short)
             .groupBy("id")
             .agg(F.min("lab").alias("lab"))
-            .localCheckpoint()
         )
-        changed = (
-            new.join(lab.withColumnRenamed("lab", "_old"), "id")
-            .where(F.col("lab") != F.col("_old"))
-            .limit(1)
-            .count()
-        )
-        lab = new
-        if changed == 0:
-            return lab
-    raise ValueError(
-        f"min-label propagation did not converge in {max_rounds} rounds "
-        "(graph diameter exceeds the cap); raise max_rounds"
+
+    return fixpoint(
+        verts.select("id", F.col("id").alias("lab")),
+        round_,
+        max_rounds,
+        "min-label propagation",
     )
 
 

@@ -1799,8 +1799,8 @@ def _qdigest_compress(
     else:
         final_low = None
         rest = nodes
-    rows = rest.collect()  # bounded: <= 2^(universe_bits - split + 1)
     bound = 1 << (universe_bits - split + 1)
+    rows = rest.limit(bound + 1).collect()
     if len(rows) > bound:
         # distinct (lvl, idx) nodes at levels >= split of a 2^ubits
         # dyadic universe cannot exceed the bound — exceeding it means

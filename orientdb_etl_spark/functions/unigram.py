@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orientdb_etl_spark.functions.iterate import chain_cut
+
 #: Sentinel for "piece not in vocabulary" — any path through it loses
 #: to any all-in-vocabulary path (single chars are always in), and both
 #: engines fold the same literal, so backtrace equality still holds.
@@ -401,9 +403,9 @@ def _train_eager(
     prune_to: int | None,
     prune_by: str,
 ) -> DataFrame:
-    """The eager (driver-pinned) EM loop, restructured for round 9.
+    """The eager (driver-pinned) EM loop.
 
-    The old eager path re-ran, EVERY iteration, the grid⋈vocab
+    A naive eager path re-runs, EVERY iteration, the grid⋈vocab
     broadcast join plus the per-word ``collect_list`` regroup that
     assembles the flat score arrays — a corpus-vocabulary-sized shuffle
     per iteration at scale, and the dominant per-job latency at the
@@ -413,16 +415,16 @@ def _train_eager(
     built ONCE as SEED-SLOT INDEX arrays (``_si[idx]`` = the seed slot
     of the cell's piece, −1 if out of vocabulary/range) and cached, and
     each iteration's scores are a ``transform`` lookup into that
-    iteration's log-prob ARRAY LITERAL (``F.lit(list)`` — a true
-    Literal, O(1) ``element_at``, safe inside lambdas; per-slot
-    CreateArray forms are NOT constant-folded there). Per iteration
-    this leaves ONE corpus-vocabulary-sized job (DP + chosen-piece
-    count, a single exchange) plus one literal-sized log-prob job.
+    iteration's log-prob ARRAY, a 1-row in-plan frame broadcast onto
+    the word arrays (no per-iteration literal in the DP stage's code).
+    Fixed-vocabulary iterations chain lazily into one action
+    (``iterate.chain_cut``); with pruning each iteration is ONE
+    corpus-vocabulary-sized job plus the 1-row log-prob job.
 
     Bit-parity with the lazy path: pruned/out-of-vocabulary cells score
     the same ``-1e9`` double; in-vocabulary cells read the identical
-    6-dp-rounded ``lp`` doubles COLLECTED from Spark (``log`` never
-    runs in Python); the DP folds the same doubles in the same order.
+    6-dp-rounded ``lp`` doubles, computed by Spark (``log`` never runs
+    in Python); the DP folds the same doubles in the same order.
     The M-step (Laplace +1) and the prune ranks are exact integer /
     collected-double arithmetic, so the driver replay of the relational
     forms is exact (the Bradley-Terry precedent). All per-iteration
@@ -461,7 +463,7 @@ def _train_eager(
         counts_df = spark.createDataFrame(
             sorted(counts.items()), "piece string, cnt bigint"
         ).join(F.broadcast(slots_lit), "piece").select("_slot", "cnt")
-        for _ in range(n_iter):
+        for it in range(1, n_iter + 1):
             # slot-ordered log-prob array in ONE aggregation (sum +
             # collect_list together keep counts_df single-consumer);
             # cnt is never NULL here — Laplace keeps every slot alive
@@ -495,6 +497,7 @@ def _train_eager(
                     "cnt"
                 ),
             )
+            counts_df = chain_cut(counts_df, it, n_iter)
         rows = counts_df.collect()  # <= |V| by construction
         counts = {slot_pieces[r._slot]: int(r.cnt) for r in rows}
         final = spark.createDataFrame(

@@ -1284,7 +1284,7 @@ def test_bpe_train_sennrich_example(spark):
         [(1, "low low low lower lower newest newest newest newest widest")],
         "doc_id int, text string",
     )
-    merges = bpe_train(docs, "text", num_merges=5, checkpoint_every=None)
+    merges = bpe_train(docs, "text", num_merges=5)
     rows = sorted((r.step, r.pair, r.freq) for r in merges.collect())
     # step 1: 'w e' appears in lower(2) + newest(4) + widest... 'we' only
     # lower+newest = 6; verified stable across engines by the gate twin
@@ -1307,7 +1307,7 @@ def test_bpe_train_is_one_plan_no_collect(spark):
     )
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup() or [])
-    merges = bpe_train(docs, "text", num_merges=3, checkpoint_every=None)
+    merges = bpe_train(docs, "text", num_merges=3)
     after = len(tracker.getJobIdsForGroup() or [])
     assert after == before  # construction ran zero jobs
     assert merges.count() == 3
@@ -1319,7 +1319,7 @@ def test_bpe_repeated_symbol_runs(spark):
     from orientdb_etl_spark.functions.bpe import bpe_segment, bpe_train
 
     docs = spark.createDataFrame([(1, "aaa aaa")], "doc_id int, text string")
-    merges = bpe_train(docs, "text", num_merges=1, checkpoint_every=None)
+    merges = bpe_train(docs, "text", num_merges=1)
     r = merges.first()
     assert r.pair == "a a" and r.freq == 4
     seg = bpe_segment(docs, merges, "text")
@@ -2435,9 +2435,7 @@ def test_wordpiece_train_matches_python_replay(spark):
 
     corpus = ["low lower lowest", "low low newer newest", "wider new"]
     docs = spark.createDataFrame([(t,) for t in corpus], "text string")
-    got = wordpiece_train(
-        docs, "text", num_merges=4, checkpoint_every=None
-    ).collect()
+    got = wordpiece_train(docs, "text", num_merges=4).collect()
 
     words = Counter(w for t in corpus for w in t.split())
     seqs = {(" " + " ".join(w) + " </w> "): f for w, f in words.items()}
@@ -2478,10 +2476,22 @@ def test_wordpiece_prefers_rare_predictive_pair_over_frequent(spark):
     docs = spark.createDataFrame(
         [("ab ab ab ab ac ba qz",)], "text string"
     )
-    first = wordpiece_train(
-        docs, "text", num_merges=1, checkpoint_every=None
-    ).collect()[0]
+    first = wordpiece_train(docs, "text", num_merges=1).collect()[0]
     assert first.pair == "q z"
+
+
+@pytest.mark.parametrize("trainer", ["bpe_train", "wordpiece_train"])
+def test_merge_trainers_stop_when_merges_run_out(spark, trainer):
+    """Single-character words admit one merge each (symbol + '</w>'):
+    asking for more returns only the completed steps, no crash."""
+    from orientdb_etl_spark.functions import bpe
+
+    docs = spark.createDataFrame([("a a b",)], "text string")
+    got = getattr(bpe, trainer)(docs, "text", num_merges=3).collect()
+    assert sorted((r.step, r.pair) for r in got) == [
+        (1, "a </w>"),
+        (2, "b </w>"),
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -62,15 +62,21 @@ def test_pagerank_matches_reference_recurrence(spark):
 
 
 def test_pagerank_plan_size_bounded_by_periodic_checkpoint(spark):
-    """Round 9 chains single-consumer iterations lazily (no per-round
-    job barrier) and cuts lineage every 8 iterations: the 16-iteration
-    plan must stay in the same ballpark as the 8-iteration plan — the
-    checkpoint at iteration 8 resets the lineage, so growth past it is
+    """PageRank and label propagation chain single-consumer rounds
+    lazily (no per-round job barrier) and cut lineage every 8 rounds:
+    the 16-round plan must stay in the same ballpark as the 8-round
+    plan — the cut at round 8 resets the lineage, so growth past it is
     bounded, not cumulative."""
+    from orientdb_etl_spark.functions.graph import label_propagation
+
     e = _edges(spark, [(1, 2), (2, 1)])
-    p8 = pagerank(e, iterations=8)._jdf.queryExecution().toString()
-    p16 = pagerank(e, iterations=16)._jdf.queryExecution().toString()
-    assert len(p16) < 2 * len(p8)
+    for run in (
+        lambda n: pagerank(e, iterations=n),
+        lambda n: label_propagation(e, rounds=n),
+    ):
+        p8 = run(8)._jdf.queryExecution().toString()
+        p16 = run(16)._jdf.queryExecution().toString()
+        assert len(p16) < 2 * len(p8)
 
 
 def test_graph_config_transformers(spark):
@@ -255,6 +261,16 @@ def test_kcore_path_fully_peels_multiround(spark):
     assert kcore(_edges(spark, path), 2).count() == 0
 
 
+def test_kcore_cap_raises_instead_of_partial_peel(spark):
+    """A long path peels one vertex off each end per round; stopping
+    after one round would leave a partial peel that is not a k-core."""
+    from orientdb_etl_spark.functions.graph import kcore
+
+    path = [(i, i + 1) for i in range(20)]
+    with pytest.raises(RuntimeError, match="did not converge"):
+        kcore(_edges(spark, path), 2, max_iter=1)
+
+
 def test_kcore_k1_drops_only_isolated_selfloops(spark):
     from orientdb_etl_spark.functions.graph import kcore
 
@@ -381,6 +397,8 @@ def test_sssp_prefers_cheaper_longer_path(spark):
 
 
 def test_sssp_rounds_bound_path_length(spark):
+    """``rounds`` is part of the answer, not a convergence cap: hitting
+    it before the fixpoint returns the bounded distances, no error."""
     from orientdb_etl_spark.functions.graph import weighted_sssp
 
     edges = [(1, 2, 1), (2, 3, 1), (3, 4, 1)]

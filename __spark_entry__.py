@@ -510,7 +510,7 @@ def q_http_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 },
                 spark=spark,
             )
-            # compile() stages the HTTP body eagerly, so the server can shut
+            # compile() stages the HTTP body up front, so the server can shut
             # down as soon as the plan exists
             return p.compile()
         finally:
@@ -643,9 +643,9 @@ def q_http_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape the single-url source (OHttpSource.java:36-117 parity) cannot
     cover: the driver stages nothing; bytes flow source → executor.
 
-    The result is checkpointed eagerly so the fixture server can shut
-    down before the driver's collect; at scale the fetch output streams
-    straight into the downstream plan instead."""
+    The result is materialized by a local checkpoint so the fixture
+    server can shut down before the driver's collect; at scale the fetch
+    output streams straight into the downstream plan instead."""
     import functools
     import http.server
     import os
@@ -716,7 +716,7 @@ def q_stdin_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             },
             spark=spark,
         )
-        # compile() consumes stdin eagerly (the reference reads the stream
+        # compile() consumes stdin up front (the reference reads the stream
         # once, OInputSource.java:44-51)
         return p.compile()
     finally:
@@ -3353,7 +3353,7 @@ def q_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return unigram_lm_train(
         docs, "text", max_piece_len=3, max_word_len=12,
-        seed_multi=40, n_iter=2, eager=True,
+        seed_multi=40, n_iter=2,
     )
 
 
@@ -3368,7 +3368,7 @@ def q_unigram_lm_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return unigram_lm_train(
         docs, "text", max_piece_len=3, max_word_len=12,
-        seed_multi=40, n_iter=2, prune_to=20, eager=True,
+        seed_multi=40, n_iter=2, prune_to=20,
     )
 
 
@@ -3385,7 +3385,7 @@ def q_unigram_lm_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return unigram_lm_train(
         docs, "text", max_piece_len=3, max_word_len=12,
-        seed_multi=40, n_iter=2, prune_to=20, prune_by="loss", eager=True,
+        seed_multi=40, n_iter=2, prune_to=20, prune_by="loss",
     )
 
 
@@ -3406,7 +3406,7 @@ def q_unigram_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     vocab = unigram_lm_train(
         docs, "text", max_piece_len=3, max_word_len=12,
-        seed_multi=40, n_iter=1, eager=True,
+        seed_multi=40, n_iter=1,
     )
     seg = unigram_segment(
         docs, vocab, "text", max_piece_len=3, max_word_len=12
@@ -3606,7 +3606,6 @@ def q_doremi_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         lr=2.0,
         eta=10.0,
         smooth=0.1,
-        eager=True,
     )
 
 
@@ -3623,9 +3622,7 @@ def _qdigest_base(spark: SparkSession, sf_dir: str):
             F.floor(F.col("l_extendedprice") * 100).cast("long").alias("c")
         )
     )
-    return cents, qdigest_build(
-        cents, "c", k=256, universe_bits=24, eager=True
-    )
+    return cents, qdigest_build(cents, "c", k=256, universe_bits=24)
 
 
 def q_qdigest_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6934,14 +6931,13 @@ def q_stream_bt(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     # iters=4: the equality certificate holds for ANY depth (both fits
     # are pure functions of the battle matrix); 4 keeps the row's cost
-    # certificate-shaped (each eager iteration is ~3 bounded jobs)
+    # certificate-shaped (the MM iterations run driver-side)
     streamed = bradley_terry(
         read_stream_pairs(spark, f"{base}/out", "winner", "loser"),
         count_col="n",
         iters=4,
-        eager=True,
     )
-    batch = bradley_terry(alls, iters=4, eager=True)
+    batch = bradley_terry(alls, iters=4)
     n_sym = streamed.exceptAll(batch).count() + batch.exceptAll(
         streamed
     ).count()
@@ -7235,7 +7231,7 @@ def q_stream_qdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_sketch = sum(r.cnt for r in merged.collect())
     bound = 16 * max(n_sketch // 64, 1)
     # the exact-data certificate reads straight from the lineitem scan
-    # (cents never references the scratch dir), so no eager
+    # (cents never references the scratch dir), so no up-front
     # materialization is needed before the rmtree — the old
     # localCheckpoint here was one whole extra pass over the table
     data = cents.drop("_sk")

@@ -364,6 +364,9 @@ HEADLINE = [
     "quality_clf_score",
     "jl_distortion",
     "bt_leaderboard",
+    # round-9's largest local win besides unigram_lm_loss (listed
+    # above), added so CORE can carry it
+    "wordpiece_merges",
 ]
 
 # The DRIVER-DEFAULT capture set: every driver-gate family plus the most
@@ -428,9 +431,9 @@ CORE = [
     "weighted_percentiles",
     "snapshot_diff",
     "zorder_key",
-    # round-8 sixth wave (cheap representatives; wordpiece_merges and
-    # stream_qdigest stay FULL-only — tokenizer/streaming families are
-    # already in CORE via bpe_merges/unigram_lm and the stream_* rows)
+    # round-8 sixth wave (cheap representatives; stream_qdigest stays
+    # FULL-only — the streaming family is already in CORE via the
+    # stream_* rows)
     "pass_at_k",
     "textrank",
     "bitext_mine",
@@ -459,6 +462,10 @@ CORE = [
     "dsir_weights",
     "jl_distortion",
     "bt_leaderboard",
+    # round-9's two largest local wins, promoted so the driver's bench
+    # verifies them (additions only)
+    "unigram_lm_loss",
+    "wordpiece_merges",
 ]
 
 

@@ -40,9 +40,10 @@ Scale shape at 100 TB: the corpus feature table is built ONCE and
 cached (2 consumers per DRO step + the loss pass); all iteration state
 is bounded — weights ``buckets+1`` rows, domain weights ``D`` rows,
 per-(domain, bucket) gradient partials ``D·(buckets+1)`` rows, all
-map-side combining. No driver loop over data; ``eager=True`` pins the
-bounded state driver-side per step (the k-means-centroids pattern) and
-releases every cache before returning.
+map-side combining. No driver loop over data: the bounded state is
+pinned driver-side per step through ``iterate.pin`` (the
+k-means-centroids pattern), and the feature cache is released before
+returning.
 
 No counterpart in the reference; training-data-pipeline extension per
 SURVEY §2.8 (the mixture-planning family's trained-model member, next
@@ -51,9 +52,12 @@ to the static UniMax/temperature allocators).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orientdb_etl_spark.functions.iterate import pin
 from orientdb_etl_spark.functions.quality_clf import (
     _doc_feature_arrays,
     _margin_expr,
@@ -77,7 +81,6 @@ def doremi_mixture(
     eta: float = 1.0,
     smooth: float = 0.1,
     round_to: int = 6,
-    eager: bool = False,
 ) -> DataFrame:
     """Run DoReMi and return one row per domain:
     ``(domain_col, n_docs, excess_last, alpha_final, alpha)`` where
@@ -124,9 +127,6 @@ def doremi_mixture(
     if n_domains == 0:
         raise ValueError("train corpus has no feature-bearing documents")
 
-    def _pin(frame: DataFrame) -> DataFrame:
-        return spark.createDataFrame(frame.collect(), frame.schema)
-
     def _wl(frame: DataFrame) -> "list[int]":
         by_b = {r.b: r.w_nano for r in frame.collect()}  # buckets-sized
         return [by_b[b] for b in range(buckets + 1)]
@@ -160,7 +160,6 @@ def doremi_mixture(
         n_max,
         iters=ref_iters,
         lr=lr,
-        eager=eager,
         _docf=docf,
     )
     _, l_ref = _p_l_exprs()
@@ -170,7 +169,7 @@ def doremi_mixture(
         .agg(F.sum(l_ref).alias("ref_sum"))
         .join(per_dom, "_d")
     )
-    ref_dom = _pin(ref_dom) if eager else ref_dom.cache()
+    _, ref_dom = pin(ref_dom, n_domains, "DoReMi reference losses")
 
     grid = spark.range(buckets + 1).select(
         F.col("id").cast("int").alias("b")
@@ -182,7 +181,7 @@ def doremi_mixture(
     alpha = per_dom.select(
         "_d", F.lit(a0).cast("bigint").alias("a_nano")
     )
-    alpha = _pin(alpha) if eager else alpha.cache()
+    _, alpha = pin(alpha, n_domains, "DoReMi domain weights")
     acc = alpha.select("_d", F.col("a_nano").alias("acc_nano"))
     excess = None
     for _ in range(iters):
@@ -238,15 +237,12 @@ def doremi_mixture(
         # the final output, and the w update read materialized row sets
         # instead of re-deriving the corpus passes (the same k-means-
         # centroids discipline; both bounded by construction)
-        if eager:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as _tp:
-                _fe = _tp.submit(_pin, excess)
-                _fs = _tp.submit(_pin, s_db)
-                excess, s_db = _fe.result(), _fs.result()
-        else:
-            excess, s_db = excess.cache(), s_db.cache()
+        with ThreadPoolExecutor(max_workers=2) as _tp:
+            _fe = _tp.submit(pin, excess, n_domains, "DoReMi excess loss")
+            _fs = _tp.submit(
+                pin, s_db, n_domains * (buckets + 1), "DoReMi gradients"
+            )
+            excess, s_db = _fe.result()[1], _fs.result()[1]
         # multiplicative weights: pin the raw update per domain, then
         # normalize over the INTEGER total and re-pin after smoothing
         raw = excess.join(F.broadcast(alpha), "_d").select(
@@ -278,9 +274,8 @@ def doremi_mixture(
         # previous pinned alpha + the 1-row total), so the pin is a
         # sub-second local-relation job — cheaper than letting every
         # later consumer (grads, acc, the final output) re-evaluate the
-        # broadcast-join chain. Non-eager keeps the cache (the trainer's
-        # documented trade-off: acc/out reference every step).
-        alpha = _pin(alpha) if eager else alpha.cache()
+        # broadcast-join chain.
+        _, alpha = pin(alpha, n_domains, "DoReMi domain weights")
         acc = (
             acc.join(alpha, "_d")
             .select(
@@ -320,13 +315,9 @@ def doremi_mixture(
                 ).alias("w_nano"),
             )
         )
-        # the weight table is buckets-sized by construction — collect
-        # it for the next step's literal (k-means-centroids pattern)
-        if not eager:
-            w = w.cache()
-        w_rows = w.collect()
-        if eager:
-            w = spark.createDataFrame(w_rows, w.schema)
+        # the weight table is buckets-sized by construction — pin it
+        # for the next step's literal (k-means-centroids pattern)
+        w_rows, w = pin(w, buckets + 1, "DoReMi proxy weights")
         by_b = {r.b: r.w_nano for r in w_rows}
         wl = [by_b[b] for b in range(buckets + 1)]
     out = (
@@ -344,7 +335,6 @@ def doremi_mixture(
             ).alias("alpha"),
         )
     )
-    if eager:
-        out = _pin(out)
-        docf.unpersist()
+    _, out = pin(out, n_domains, "DoReMi mixture")
+    docf.unpersist()
     return out

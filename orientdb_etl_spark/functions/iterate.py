@@ -1,18 +1,22 @@
-"""The engine's two iteration shapes, each written once. The reference
-has no iterative operator (records flow once through the transformer
-chain, OETLPipeline.java:98-139); every loop belongs to an extension
-operator and takes one of these shapes:
+"""The engine's two iteration shapes and its bounded driver pin, each
+written once. The reference has no iterative operator (records flow
+once through the transformer chain, OETLPipeline.java:98-139); every
+loop belongs to an extension operator and takes one of these shapes:
 
 - :func:`fixpoint` — repeat a step until a round reproduces its input;
 - :func:`chain_cut` — a fixed number of single-consumer rounds chained
   lazily into one action, with the lineage cut every ``_CUT_EVERY``.
+
+Bounded loop state (weights, domain tables, vocabularies, sketches) is
+brought to the driver through :func:`pin`, which checks the bound
+before anything is built from the rows.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 _CUT_EVERY = 8
@@ -66,3 +70,17 @@ def chain_cut(df: DataFrame, rnd: int, rounds: int) -> DataFrame:
     if rnd % _CUT_EVERY == 0 and rnd < rounds:
         return df.localCheckpoint(eager=False)
     return df
+
+
+def pin(df: DataFrame, bound: int, what: str) -> tuple[list[Row], DataFrame]:
+    """Collect a frame of at most ``bound`` rows and return the rows with
+    the same rows as a literal table. Later consumers read the literal
+    instead of re-running ``df``'s lineage, and no cache entry is left
+    behind. At most ``bound + 1`` rows are collected; one over the bound
+    raises ``RuntimeError`` naming ``what`` before anything is built."""
+    rows = df.limit(bound + 1).collect()
+    if len(rows) > bound:
+        raise RuntimeError(
+            f"{what}: more than {bound} rows, over its construction bound"
+        )
+    return rows, df.sparkSession.createDataFrame(rows, df.schema)

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orientdb_etl_spark.functions.iterate import pin
+
 __all__ = [
     "roc_auc",
     "calibration_curve",
@@ -580,7 +582,6 @@ def bradley_terry(
     count_col: str | None = None,
     iters: int = 8,
     round_to: int = 6,
-    eager: bool = False,
 ) -> DataFrame:
     """Bradley–Terry preference-strength fit (Bradley & Terry,
     Biometrika 1952) by Hunter's MM algorithm (Ann. Statist. 2004) —
@@ -606,13 +607,12 @@ def bradley_terry(
 
     Scale shape at 100 TB: ONE corpus-sized aggregation collapses the
     battle log to the ≤items² matrix ``n_ij``; the MM loop then runs
-    DRIVER-SIDE over the collected matrix (both eager and default
-    modes), so the driver-memory requirement is items² — bounded by
-    ``_BT_MAX_DRIVER_ITEMS`` (2048 items ⇒ ≤ ~4.2M matrix rows), past
-    which the call raises instead of collecting. The corpus-sized
-    collapse itself stays distributed; only the items-bounded matrix
-    and wins table ever reach the driver. No counterpart in the
-    reference; §2.8 extension.
+    DRIVER-SIDE over the collected matrix, so the driver-memory
+    requirement is items² — bounded by ``_BT_MAX_DRIVER_ITEMS`` (2048
+    items ⇒ ≤ ~4.2M matrix rows), past which the call raises instead of
+    collecting. The corpus-sized collapse itself stays distributed; only
+    the items-bounded matrix and the wins and games tables ever reach
+    the driver. No counterpart in the reference; §2.8 extension.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -644,7 +644,7 @@ def bradley_terry(
         )
         .groupBy("_i", "_j")
         .agg(F.sum("_n").alias("_n"))
-        .cache()  # items²-bounded; iters consumers
+        .cache()  # items²-bounded; counted, then collected
     )
     items = g.select("_i").distinct()
     k = items.count()  # bounded: leaderboard size
@@ -664,9 +664,6 @@ def bradley_terry(
             "pre-aggregate the battle log to a bounded leaderboard key"
         )
     a0 = int(round(1e9 / k))
-
-    def _pin(frame: DataFrame) -> DataFrame:
-        return spark.createDataFrame(frame.collect(), frame.schema)
 
     # The MM iterations run over the items²-bounded battle matrix with
     # nothing but exact integer sums and per-item IEEE-double
@@ -695,7 +692,16 @@ def bradley_terry(
         )
 
     g_rows = g.collect()  # items²-bounded by construction
-    w_by_i = {r._i: r.wins for r in wins.collect()}  # items-bounded
+    w_rows, _ = pin(wins, k, "Bradley-Terry wins")
+    # θ, wins and games are all driver-side from here on — release the
+    # battle-matrix caches, so nothing below re-reads the (possibly
+    # since-mutated) source through CacheManager's canonical-plan match
+    wl.unpersist()
+    g.unpersist()
+    w_by_i = {r._i: r.wins for r in w_rows}
+    games: dict = {}
+    for r in g_rows:
+        games[r._i] = games.get(r._i, 0) + r._n
     th = {r._i: a0 for r in g_rows}
     for _ in range(int(iters)):
         d: dict = {}
@@ -716,34 +722,18 @@ def bradley_terry(
             i: int(_rhu(float(t) * 1e9 / max(float(s), 1.0)))
             for i, t in raw.items()
         }
-    theta = spark.createDataFrame(
-        sorted(th.items()),
+    zero = F.lit(0).cast("bigint")
+    out = spark.createDataFrame(
+        [(i, w_by_i.get(i, 0), games[i], t) for i, t in sorted(th.items())],
         items.select(
-            "_i", F.lit(a0).cast("bigint").alias("_t")
+            "_i", zero.alias("wins"), zero.alias("games"), zero.alias("_t")
         ).schema,
-    )
-    games = g.groupBy("_i").agg(F.sum("_n").alias("games"))
-    if eager:
-        # θ is pinned driver-side, so the battle-matrix caches have no
-        # remaining consumer past this expression — release them, and
-        # pin wins/games too so nothing below re-reads the (possibly
-        # since-mutated) source through CacheManager's canonical-plan
-        # match. Eager mode leaks nothing (the quality_clf contract).
-        wins, games = _pin(wins), _pin(games)
-        wl.unpersist()
-        g.unpersist()
-    out = (
-        theta.join(F.broadcast(wins), "_i", "left")
-        .join(F.broadcast(games), "_i")
-        .select(
-            F.col("_i").alias("item"),
-            F.coalesce(F.col("wins"), F.lit(0).cast("long")).alias("wins"),
-            "games",
-            F.round(F.col("_t").cast("double") / 1e9, round_to).alias(
-                "theta"
-            ),
-            F.col("_t").alias("_tn"),
-        )
+    ).select(
+        F.col("_i").alias("item"),
+        "wins",
+        "games",
+        F.round(F.col("_t").cast("double") / 1e9, round_to).alias("theta"),
+        F.col("_t").alias("_tn"),
     )
     # rank by (θ desc, item asc) WITHOUT a global ORDER BY window (an
     # unpartitioned WindowExec is the one error-severity plan hazard):

@@ -1762,9 +1762,9 @@ def _qdigest_compress(
     k-means-centroids bounded-state pattern). Nodes settled below the
     split level are final (no later sweep can touch them) and never
     leave the executors. One Spark job replaces ``universe_bits``
-    sequential per-level jobs, each of which needed an eager
-    ``localCheckpoint`` to stop the triply-self-referencing plan from
-    growing 3^levels."""
+    sequential per-level jobs, each of which needed a
+    ``localCheckpoint(eager=True)`` to stop the triply-self-referencing
+    plan from growing 3^levels."""
     import numpy as np
     import pandas as pd
 
@@ -1829,7 +1829,6 @@ def qdigest_build(
     value_col: str,
     k: int = 256,
     universe_bits: int = 24,
-    eager: bool = False,
 ) -> DataFrame:
     """Q-digest mergeable quantile sketch (Shrivastava et al., SenSys
     2004) over a non-negative integer column — the quantile twin of the
@@ -1850,10 +1849,11 @@ def qdigest_build(
     ``[0, 2^universe_bits)`` — validated up front (scale the column to
     integer units first, e.g. price cents).
 
-    ``eager=True`` driver-pins the finished sketch (≤ 3k rows — the
-    k-means-centroids pattern) so downstream consumers read a literal
-    table; either way the per-sweep ``localCheckpoint`` blocks are
-    released with the frame by the context cleaner.
+    The finished sketch is the low levels' ``localCheckpoint`` plus the
+    driver-finished top levels as a literal table, so downstream
+    consumers read materialized rows and no cache entry is left; the
+    checkpoint blocks are released with the frame by the context
+    cleaner.
 
     Cite: reference has no counterpart; SURVEY §2.8 sketch family
     (cms_build / hll_union_certificate's quantile sibling).
@@ -1864,7 +1864,6 @@ def qdigest_build(
         raise ValueError(
             f"universe_bits must be in [1, 40], got {universe_bits}"
         )
-    spark = df.sparkSession
     vals = df.where(F.col(value_col).isNotNull()).select(
         F.col(value_col).cast("long").alias("_v")
     )
@@ -1887,10 +1886,7 @@ def qdigest_build(
     nodes = leaves.select(
         F.lit(0).alias("lvl"), "idx", "cnt"
     )
-    nodes = _qdigest_compress(nodes, t, universe_bits)
-    if eager:
-        return spark.createDataFrame(nodes.collect(), nodes.schema)
-    return nodes
+    return _qdigest_compress(nodes, t, universe_bits)
 
 
 def qdigest_merge(
@@ -1898,7 +1894,6 @@ def qdigest_merge(
     b: DataFrame,
     k: int = 256,
     universe_bits: int = 24,
-    eager: bool = False,
 ) -> DataFrame:
     """Merge two q-digests built with the same ``universe_bits``:
     count-sum on shared ``(lvl, idx)`` nodes, then one recompression
@@ -1907,7 +1902,6 @@ def qdigest_merge(
     same never-undershoot / ``universe_bits·n/k`` guarantees — the
     distributed-aggregation property that lets per-partition or
     per-day sketches roll up without touching raw data again."""
-    spark = a.sparkSession
     u = (
         a.unionByName(b)
         .groupBy("lvl", "idx")
@@ -1915,12 +1909,7 @@ def qdigest_merge(
     )
     n = u.agg(F.sum("cnt")).first()[0]
     t = max(int(n) // k, 1)
-    nodes = _qdigest_compress(
-        u.select("lvl", "idx", "cnt"), t, universe_bits
-    )
-    if eager:
-        return spark.createDataFrame(nodes.collect(), nodes.schema)
-    return nodes
+    return _qdigest_compress(u.select("lvl", "idx", "cnt"), t, universe_bits)
 
 
 def qdigest_quantiles(

@@ -28,12 +28,12 @@ and in the DuckDB oracle, via the integer-pinning discipline of
   (w₀ = 0, so iteration 1's p is exactly 0.5 for every doc).
 
 Scale shape at 100 TB: the corpus's feature table is built ONCE and
-reused every iteration (cache it — ``iters×2`` consumers); each
-iteration is one broadcast join of the (buckets+1)-row weight table +
-two hash aggregations (per-doc margins, per-bucket gradients), both
+reused every iteration (cached, and released before the trainer
+returns); each iteration folds the corpus against the 1-row broadcast
+weight array and runs one per-bucket gradient aggregation,
 partial-combining map-side. Weight state is buckets-sized, never
-corpus-sized; there is no driver loop over data, no collect. Scoring a
-new corpus is one broadcast join + one aggregation.
+corpus-sized: it is the only thing collected, once per iteration.
+Scoring a new corpus is one map-side fold against the weight literal.
 
 No counterpart in the reference; training-data-pipeline extension per
 SURVEY §2.8.
@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from orientdb_etl_spark.functions.dsir import _bucket_expr, _features
+from orientdb_etl_spark.functions.iterate import pin
 
 
 def hashed_doc_features(
@@ -186,7 +187,6 @@ def train_quality_classifier(
     n_max: int = 2,
     iters: int = 4,
     lr: float = 0.5,
-    eager: bool = False,
     _docf: DataFrame | None = None,
 ) -> DataFrame:
     """Train the classifier; returns the final weight table
@@ -195,17 +195,12 @@ def train_quality_classifier(
     trajectory is exact integer arithmetic between the per-doc sigmoid
     evaluations — see the module docstring for the pinning scheme.
 
-    Cache discipline (the unigram-LM pattern): the corpus feature table
-    feeds 2·``iters`` consumers and each iteration's weight table feeds
-    two — both get cut points or every consumer re-executes the full
-    upstream lineage (doubling per iteration). Default: ``cache()`` on
-    both (job-free construction; the weight caches are
-    ``buckets+1``-row, the bounded case the cache-discipline doc
-    allows, but they persist for the session). ``eager=True`` pins each
-    iteration's weights driver-side (``collect`` → literal table — the
-    k-means-centroids pattern; weight state is buckets-sized by
-    construction, never corpus-sized) and releases the feature cache
-    before returning, so long-lived sessions leak nothing."""
+    Cache discipline: the corpus feature table feeds every iteration,
+    so it is cached once and, when this call built it, released before
+    returning. Each iteration's weight table is buckets-sized by
+    construction and pinned driver-side through ``iterate.pin`` (the
+    k-means-centroids pattern), so the returned weights are a literal
+    table and nothing stays persisted."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     if lr <= 0:
@@ -271,28 +266,18 @@ def train_quality_classifier(
                 ).alias("w_nano"),
             )
         )
-        # the weight table is buckets-sized by construction — collecting
-        # it each iteration IS the k-means-centroids bounded-state
-        # pattern, and the values feed the next iteration's literal
-        if not eager:
-            w = w.cache()
-        rows = w.collect()
+        rows, w = pin(w, buckets + 1, "quality-classifier weight table")
         if len(rows) != buckets + 1:
             # the grid join pins one row per bucket slot (+ bias) by
-            # construction — any other cardinality means the weight
-            # table was corrupted upstream; raise before the literal
-            # rebuild silently drops/duplicates slots
+            # construction — fewer means the weight table was corrupted
+            # upstream; raise before the next literal drops slots
             raise RuntimeError(
                 f"weight table collected {len(rows)} rows, expected "
                 f"{buckets + 1} (buckets={buckets} + bias slot)"
             )
-        if eager:
-            w = spark.createDataFrame(rows, w.schema)
         by_b = {r.b: r.w_nano for r in rows}
         wl = [by_b[b] for b in range(buckets + 1)]
-    if eager and owns_docf:
-        # the final weights are a literal table — releasing the feature
-        # cache leaves nothing persisted and the result stays valid
+    if owns_docf:
         docf.unpersist()
     return w
 

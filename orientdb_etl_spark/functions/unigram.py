@@ -21,12 +21,13 @@ Algorithm (all relational, all deterministic):
    lattice is ONE projection of nested higher-order functions
    (``aggregate``/``transform``/``array_max`` — JVM codegen, no Python,
    no shuffle): per-word piece scores become a flat array indexed by
-   ``(start-1)*L + len`` (grid join against the broadcast vocabulary),
-   the forward pass folds over positions, and the backtrace recovers
-   the argmax path by EXACT float equality against the forward values
-   (both engines fold the same rounded doubles in the same order, so
-   ``best[i-l] + score == best[i]`` is engine-portable; ties break to
-   the LONGEST piece via ``array_max`` over the qualifying lengths).
+   ``(start-1)*L + len`` (built once against the seed vocabulary; see
+   :func:`unigram_lm_train`), the forward pass folds over positions,
+   and the backtrace recovers the argmax path by EXACT float equality
+   against the forward values (both engines fold the same rounded
+   doubles in the same order, so ``best[i-l] + score == best[i]`` is
+   engine-portable; ties break to the LONGEST piece via ``array_max``
+   over the qualifying lengths).
 4. **M-step** — chosen-piece counts (frequency-weighted hash agg) are
    Laplace-smoothed over the FIXED seed vocabulary (``count + 1``), so
    the piece set never changes across iterations and the oracle's CTE
@@ -37,12 +38,11 @@ Algorithm (all relational, all deterministic):
 
 Scale shape at 100 TB: the corpus is touched ONCE (token explode +
 word count); every EM iteration then runs over the WORD TABLE
-(vocabulary-sized — the same reduction BPE exploits), and each
-iteration is 1 broadcast join + 2 hash aggs. The substring grid is
-``max_word_len × max_piece_len`` rows per distinct word — bounded by
-construction, never corpus-sized. No driver collect anywhere: the
-vocabulary total is a 1-row broadcast cross join, the vocabulary
-itself a broadcast-hash build side.
+(vocabulary-sized — the same reduction BPE exploits) against a 1-row
+broadcast log-prob array, with one hash agg for the chosen pieces. The
+substring grid is ``max_word_len × max_piece_len`` rows per distinct
+word — bounded by construction, never corpus-sized. Only
+vocabulary-sized state reaches the driver.
 
 No counterpart in the reference; north-star extension per SURVEY §2.8.
 """
@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from orientdb_etl_spark.functions.iterate import chain_cut
+from orientdb_etl_spark.functions.iterate import chain_cut, pin
 
 #: Sentinel for "piece not in vocabulary" — any path through it loses
 #: to any all-in-vocabulary path (single chars are always in), and both
@@ -114,33 +114,10 @@ def _with_logp(counts: DataFrame) -> DataFrame:
     )
 
 
-def _viterbi_counts(
-    grid: DataFrame, vocab: DataFrame, max_piece_len: int
-) -> DataFrame:
-    """E-step: Viterbi-segment every word against the (broadcast)
-    vocabulary and return frequency-weighted chosen-piece counts."""
-    L = max_piece_len
-    scored = grid.join(
-        F.broadcast(vocab.select(F.col("piece").alias("_p"), "lp")),
-        "_p",
-        "left",
-    ).withColumn("_idx", ((F.col("_s") - 1) * L + F.col("_l")).cast("int"))
-    # flat per-word score array: _sc[(start-1)*L + len]; array_sort on
-    # (unique idx, score) structs makes collect_list order-insensitive
-    arr = scored.groupBy("_w", "_f").agg(
-        F.expr(
-            f"transform(array_sort(collect_list(named_struct("
-            f"'i', _idx, 'v', coalesce(lp, {_NEG})))), x -> x.v)"
-        ).alias("_sc")
-    )
-    return _dp_piece_counts(arr, L)
-
-
 def _dp_piece_counts(arr: DataFrame, L: int) -> DataFrame:
     """Forward DP + exact-equality backtrace + frequency-weighted
     chosen-piece counts over a ``(_w, _f, _sc)`` frame whose ``_sc`` is
-    the flat per-word score array (shared by the lazy join-built path
-    and the eager slot-array path)."""
+    the flat per-word score array (see :func:`_slot_scores`)."""
     # forward pass: acc[j] holds best(j-1); best(i) probes best(i-l) at
     # acc[i-l+1] and the piece ending at i at _sc[(i-l)*L + l]
     dp = arr.withColumn(
@@ -186,6 +163,24 @@ def _dp_piece_counts(arr: DataFrame, L: int) -> DataFrame:
         seg.select("_f", F.explode("_pieces").alias("piece"))
         .groupBy("piece")
         .agg(F.sum("_f").alias("cnt"))
+    )
+
+
+def _slot_scores(arr0: DataFrame, lprow: DataFrame) -> DataFrame:
+    """``(_w, _f, _sc)``: each word's seed-slot array ``_si`` mapped
+    through the 1-row slot-ordered log-prob array ``_lparr``, broadcast
+    onto the words so the DP stage's generated code holds no
+    per-iteration literal; slot −1 (out of vocabulary or range) scores
+    the ``-1e9`` sentinel."""
+    return arr0.crossJoin(F.broadcast(lprow)).select(
+        "_w",
+        "_f",
+        F.transform(
+            F.col("_si"),
+            lambda i: F.when(i < 0, F.lit(-1e9).cast("double")).otherwise(
+                F.element_at(F.col("_lparr"), i + F.lit(1))
+            ),
+        ).alias("_sc"),
     )
 
 
@@ -238,7 +233,6 @@ def unigram_lm_train(
     seed_multi: int = 40,
     n_iter: int = 2,
     prune_to: int | None = None,
-    eager: bool = False,
     prune_by: str = "count",
 ) -> DataFrame:
     """Train a unigram LM vocabulary; returns (piece, freq, logp) —
@@ -255,20 +249,6 @@ def unigram_lm_train(
     are never pruned — they keep every word segmentable. ``None`` keeps
     the whole seed vocabulary (the fixed-vocab EM the oracle row pins).
 
-    ``eager=True`` pins each iteration's vocabulary-sized state
-    driver-side as a literal in-memory table (the k-means-centroids
-    pattern — a bounded |V|-row collect per iteration), which cuts both
-    execution fan-out AND plan lineage: without the plan cut, every
-    iteration nests the previous iterations' Viterbi expression trees
-    and Catalyst re-optimization grows superlinearly in ``n_iter``.
-    The word grid is cached for the run (so the corpus is scanned once)
-    and released before returning — ZERO persisted frames survive the
-    call, vs the lazy mode's n_iter+1 session-lifetime caches. This is
-    the right mode for long-lived sessions running many queries (gates,
-    benches) and for any ``prune_by='loss'`` training. Default
-    ``False`` preserves the construction-runs-zero-jobs contract
-    (pinned by test).
-
     ``prune_by`` selects the pruning score (only meaningful with
     ``prune_to``). ``"count"`` is the deterministic first-order proxy
     above. ``"loss"`` is SentencePiece's likelihood-loss rank made
@@ -283,6 +263,24 @@ def unigram_lm_train(
     piece built from rare characters (expensive to re-segment) — pinned
     by test. Cost: one extra |V|-sized self-join + fold per iteration,
     still corpus-free.
+
+    Execution shape: the piece GEOMETRY of a word's flat score array is
+    vocabulary-independent — which (start, len) cell holds which
+    substring never changes, only the log-probabilities do. So the
+    per-word arrays are built ONCE as SEED-SLOT INDEX arrays
+    (``_si[idx]`` = the seed slot of the cell's piece, −1 if out of
+    vocabulary/range) and cached, and each iteration's scores are a
+    ``transform`` lookup into that iteration's log-prob array
+    (:func:`_slot_scores`). Fixed-vocabulary iterations chain lazily
+    into one action (``iterate.chain_cut``); with pruning each iteration
+    is ONE word-table-sized job plus the 1-row log-prob job. The
+    vocabulary-sized iteration state is pinned driver-side through
+    ``iterate.pin`` (the k-means-centroids pattern): the M-step
+    (Laplace +1) and the prune ranks are exact integer /
+    collected-double arithmetic, every ``log`` runs in Spark, and the DP
+    folds the same doubles in the same order, so the result matches the
+    relational DuckDB twin bit-for-bit. The word grid is cached so the
+    corpus is scanned once; both caches are released before returning.
     """
     if n_iter <= 0:
         raise ValueError("n_iter must be positive")
@@ -290,8 +288,10 @@ def unigram_lm_train(
         raise ValueError("max_piece_len must be at least 2")
     if prune_by not in ("count", "loss"):
         raise ValueError(f"prune_by must be count|loss, got {prune_by!r}")
+    spark = df.sparkSession
+    L = max_piece_len
     words = _word_table(df, text_col, max_word_len)
-    grid = _substring_grid(words, max_piece_len)
+    grid = _substring_grid(words, L).cache()
     seed_counts = (
         grid.filter(F.col("_p").isNotNull())
         .groupBy(F.col("_p").alias("piece"))
@@ -303,134 +303,7 @@ def unigram_lm_train(
         .orderBy(F.col("cnt").desc(), F.col("piece").asc())
         .limit(seed_multi)
     )
-    # each vocabulary table below has MULTIPLE consumers (its own total
-    # aggregate + the cross join in _with_logp, the next E-step's
-    # broadcast join, and under pruning two more scans for the kept
-    # sets) — without a cut point every consumer re-executes the FULL
-    # upstream Viterbi lineage, doubling per consumer per iteration
-    # (exponential in n_iter). cache() dedups the consumers at first
-    # action while keeping construction job-free (pinned by test;
-    # localCheckpoint(eager=False) would run AQE jobs at build time via
-    # toRdd). The cached frames are vocabulary-sized (~|V| rows), the
-    # bounded-cache case the cache-discipline doc allows.
-    if eager:
-        # iteration state is VOCABULARY-sized, so pin it driver-side per
-        # iteration (the k-means-centroids pattern). The grid is
-        # word-table-sized (bounded, never corpus-sized); one cache pins
-        # it so the corpus is scanned once, released before returning —
-        # zero persisted frames survive the call.
-        spark = df.sparkSession
-        grid = grid.cache()
-    seed = singles.unionByName(multis)
-    if eager:
-        seed_rows = seed.collect()  # |V|-bounded by construction
-        return _train_eager(
-            spark,
-            grid,
-            seed_rows,
-            max_piece_len,
-            n_iter,
-            prune_to,
-            prune_by,
-        )
-    else:
-        # each vocabulary table has MULTIPLE consumers (its own total
-        # aggregate + the cross join in _with_logp, the next E-step's
-        # broadcast join, and under pruning two more scans for the kept
-        # sets) — without a cut point every consumer re-executes the
-        # FULL upstream Viterbi lineage, doubling per consumer per
-        # iteration (exponential in n_iter). cache() dedups the
-        # consumers at first action while keeping construction job-free
-        # (pinned by test; the caches are |V|-sized, the bounded-cache
-        # case the cache-discipline doc allows — but they stay persisted
-        # for the session, which is why long-lived sessions want eager)
-        seed = seed.cache()
-    vocab = _with_logp(seed)
-    pieces = seed.select("piece")
-    for _ in range(n_iter):
-        chosen = _viterbi_counts(grid, vocab, max_piece_len)
-        counts = pieces.join(chosen, "piece", "left").select(
-            "piece",
-            (F.coalesce(F.col("cnt"), F.lit(0)) + F.lit(1)).alias("cnt"),
-        )
-        if prune_to is not None:
-            if prune_by == "loss":
-                # the PRE-prune counts feed four consumers (singles, the
-                # full-vocab total + rows, the loss join) — cut here too
-                counts = counts.cache()
-                vocab_full = _with_logp(counts)
-                losses = vocab_full.join(
-                    _alt_scores(vocab_full, max_piece_len), "piece"
-                ).select(
-                    "piece",
-                    "cnt",
-                    F.round(
-                        F.col("cnt") * (F.col("lp") - F.col("alt")), 6
-                    ).alias("loss"),
-                )
-                kept_multis = (
-                    losses.orderBy(
-                        F.col("loss").desc(), F.col("piece").asc()
-                    )
-                    .limit(prune_to)
-                    .select("piece", "cnt")
-                )
-            else:
-                kept_multis = (
-                    counts.filter(F.length("piece") > 1)
-                    .orderBy(F.col("cnt").desc(), F.col("piece").asc())
-                    .limit(prune_to)
-                )
-            kept_singles = counts.filter(F.length("piece") == 1)
-            counts = kept_singles.unionByName(kept_multis)
-        counts = counts.cache()
-        if prune_to is not None:
-            pieces = counts.select("piece")
-        vocab = _with_logp(counts)
-    return vocab.select(
-        "piece",
-        F.col("cnt").cast("bigint").alias("freq"),
-        F.col("lp").alias("logp"),
-    )
-
-
-def _train_eager(
-    spark,
-    grid: DataFrame,
-    seed_rows: list,
-    max_piece_len: int,
-    n_iter: int,
-    prune_to: int | None,
-    prune_by: str,
-) -> DataFrame:
-    """The eager (driver-pinned) EM loop.
-
-    A naive eager path re-runs, EVERY iteration, the grid⋈vocab
-    broadcast join plus the per-word ``collect_list`` regroup that
-    assembles the flat score arrays — a corpus-vocabulary-sized shuffle
-    per iteration at scale, and the dominant per-job latency at the
-    fixtures. The piece GEOMETRY of that array is vocabulary-
-    independent: which (start, len) cell holds which substring never
-    changes — only the log-probabilities do. So the per-word arrays are
-    built ONCE as SEED-SLOT INDEX arrays (``_si[idx]`` = the seed slot
-    of the cell's piece, −1 if out of vocabulary/range) and cached, and
-    each iteration's scores are a ``transform`` lookup into that
-    iteration's log-prob ARRAY, a 1-row in-plan frame broadcast onto
-    the word arrays (no per-iteration literal in the DP stage's code).
-    Fixed-vocabulary iterations chain lazily into one action
-    (``iterate.chain_cut``); with pruning each iteration is ONE
-    corpus-vocabulary-sized job plus the 1-row log-prob job.
-
-    Bit-parity with the lazy path: pruned/out-of-vocabulary cells score
-    the same ``-1e9`` double; in-vocabulary cells read the identical
-    6-dp-rounded ``lp`` doubles, computed by Spark (``log`` never runs
-    in Python); the DP folds the same doubles in the same order.
-    The M-step (Laplace +1) and the prune ranks are exact integer /
-    collected-double arithmetic, so the driver replay of the relational
-    forms is exact (the Bradley-Terry precedent). All per-iteration
-    driver state is vocabulary-bounded by construction; both caches are
-    released before returning — zero persisted frames survive."""
-    L = max_piece_len
+    seed_rows = singles.unionByName(multis).collect()
     slot_pieces = sorted(r.piece for r in seed_rows)
     slot_df = spark.createDataFrame(
         [(p, i) for i, p in enumerate(slot_pieces)], "_p string, _slot int"
@@ -453,9 +326,9 @@ def _train_eager(
         # fixed-vocabulary EM: every intermediate is SINGLE-consumer
         # (state row -> E-step -> chosen counts -> next state), so the
         # whole n_iter chain runs LAZILY inside ONE action — the only
-        # driver pin is the final |V|-bounded counts collect. Pruning
-        # needs a rank between iterations (multi-consumer), so the
-        # prune modes keep the per-iteration pin loop below.
+        # driver pin is the final |V|-bounded counts. Pruning needs a
+        # rank between iterations (multi-consumer), so the prune modes
+        # pin per iteration below.
         slots_lit = spark.createDataFrame(
             [(p, i) for i, p in enumerate(slot_pieces)],
             "piece string, _slot int",
@@ -478,19 +351,7 @@ def _train_eager(
                     "transform(_cs, x -> round(ln(x.c / _tot), 6))"
                 ).alias("_lparr")
             )
-            arr = arr0.crossJoin(F.broadcast(lprow)).select(
-                "_w",
-                "_f",
-                F.transform(
-                    F.col("_si"),
-                    lambda i: F.when(
-                        i < 0, F.lit(-1e9).cast("double")
-                    ).otherwise(
-                        F.element_at(F.col("_lparr"), i + F.lit(1))
-                    ),
-                ).alias("_sc"),
-            )
-            chosen = _dp_piece_counts(arr, L)
+            chosen = _dp_piece_counts(_slot_scores(arr0, lprow), L)
             counts_df = slots_lit.join(chosen, "piece", "left").select(
                 "_slot",
                 (F.coalesce(F.col("cnt"), F.lit(0)) + F.lit(1)).alias(
@@ -498,84 +359,67 @@ def _train_eager(
                 ),
             )
             counts_df = chain_cut(counts_df, it, n_iter)
-        rows = counts_df.collect()  # <= |V| by construction
+        rows, _ = pin(counts_df, len(slot_pieces), "unigram piece counts")
         counts = {slot_pieces[r._slot]: int(r.cnt) for r in rows}
-        final = spark.createDataFrame(
-            sorted(counts.items()), "piece string, cnt bigint"
-        )
-        grid.unpersist()
-        arr0.unpersist()
-        return _with_logp(final).select(
-            "piece",
-            F.col("cnt").cast("bigint").alias("freq"),
-            F.col("lp").alias("logp"),
-        )
-    for _ in range(n_iter):
-        # log-probs of the CURRENT vocabulary, computed IN-PLAN as a
-        # 1-row slot-ordered array (log stays in Spark so the doubles
-        # match the relational twin bit-for-bit) and broadcast into the
-        # E-step — one job per iteration, and the DP stage's generated
-        # code stays literal-free, so codegen caches across iterations
-        cur = spark.createDataFrame(
-            [(i, counts.get(p)) for i, p in enumerate(slot_pieces)],
-            "_slot int, cnt bigint",
-        )  # cnt NULL = pruned/out of the current vocabulary
-        tot = cur.agg(F.sum("cnt").alias("_tot"))  # sum skips NULLs
-        lprow = (
-            cur.crossJoin(F.broadcast(tot))
-            .select(
-                "_slot",
-                F.when(
-                    F.col("cnt").isNull(), F.lit(-1e9).cast("double")
+    else:
+        for _ in range(n_iter):
+            # log-probs of the CURRENT vocabulary, computed IN-PLAN as a
+            # 1-row slot-ordered array (log stays in Spark so the doubles
+            # match the relational twin bit-for-bit) and broadcast into the
+            # E-step — one job per iteration, and the DP stage's generated
+            # code stays literal-free, so codegen caches across iterations
+            cur = spark.createDataFrame(
+                [(i, counts.get(p)) for i, p in enumerate(slot_pieces)],
+                "_slot int, cnt bigint",
+            )  # cnt NULL = pruned/out of the current vocabulary
+            tot = cur.agg(F.sum("cnt").alias("_tot"))  # sum skips NULLs
+            lprow = (
+                cur.crossJoin(F.broadcast(tot))
+                .select(
+                    "_slot",
+                    F.when(
+                        F.col("cnt").isNull(), F.lit(-1e9).cast("double")
+                    )
+                    .otherwise(
+                        F.round(F.log(F.col("cnt") / F.col("_tot")), 6)
+                    )
+                    .alias("_v"),
                 )
-                .otherwise(
-                    F.round(F.log(F.col("cnt") / F.col("_tot")), 6)
+                .agg(
+                    F.expr(
+                        "transform(array_sort(collect_list(named_struct("
+                        "'i', _slot, 'v', _v))), x -> x.v)"
+                    ).alias("_lparr")
                 )
-                .alias("_v"),
             )
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(named_struct("
-                    "'i', _slot, 'v', _v))), x -> x.v)"
-                ).alias("_lparr")
+            chosen_rows, _ = pin(
+                _dp_piece_counts(_slot_scores(arr0, lprow), L),
+                len(slot_pieces),
+                "unigram chosen-piece counts",
             )
-        )
-        arr = arr0.crossJoin(F.broadcast(lprow)).select(
-            "_w",
-            "_f",
-            F.transform(
-                F.col("_si"),
-                lambda i: F.when(i < 0, F.lit(-1e9).cast("double")).otherwise(
-                    F.element_at(F.col("_lparr"), i + F.lit(1))
-                ),
-            ).alias("_sc"),
-        )
-        chosen_rows = _dp_piece_counts(arr, L).collect()  # <= |V| rows
-        chosen = {r.piece: int(r.cnt) for r in chosen_rows}
-        # M-step: Laplace over the current piece set — exact integers
-        counts = {p: chosen.get(p, 0) + 1 for p in alive}
-        if prune_to is not None:
+            chosen = {r.piece: int(r.cnt) for r in chosen_rows}
+            # M-step: Laplace over the current piece set — exact integers
+            counts = {p: chosen.get(p, 0) + 1 for p in alive}
             if prune_by == "loss":
-                # alt scores are a vocabulary-sized Spark DP (log/DP
-                # doubles stay engine-side); the top-k rank runs on the
-                # COLLECTED 6-dp-rounded losses — same total order as
-                # the relational TakeOrdered
+                # alt scores are a vocabulary-sized Spark DP (log/DP doubles
+                # stay engine-side); the top-k rank runs on the COLLECTED
+                # 6-dp-rounded losses — same total order as the relational
+                # TakeOrdered
                 vf = spark.createDataFrame(
                     sorted((p, counts[p]) for p in alive),
                     "piece string, cnt bigint",
                 )
                 vocab_full = _with_logp(vf)
-                loss_rows = vocab_full.join(
+                losses = vocab_full.join(
                     _alt_scores(vocab_full, L), "piece"
                 ).select(
                     "piece",
                     F.round(
                         F.col("cnt") * (F.col("lp") - F.col("alt")), 6
                     ).alias("loss"),
-                ).collect()
-                ranked = sorted(
-                    loss_rows, key=lambda r: (-r.loss, r.piece)
                 )
+                loss_rows, _ = pin(losses, len(alive), "unigram prune losses")
+                ranked = sorted(loss_rows, key=lambda r: (-r.loss, r.piece))
                 kept = {r.piece for r in ranked[:prune_to]}
             else:
                 multis_l = sorted(
@@ -585,11 +429,11 @@ def _train_eager(
                 kept = set(multis_l[:prune_to])
             alive = {p for p in alive if len(p) == 1} | kept
             counts = {p: counts[p] for p in alive}
+    grid.unpersist()
+    arr0.unpersist()
     final = spark.createDataFrame(
         sorted(counts.items()), "piece string, cnt bigint"
     )
-    grid.unpersist()
-    arr0.unpersist()
     return _with_logp(final).select(
         "piece",
         F.col("cnt").cast("bigint").alias("freq"),

@@ -221,7 +221,7 @@ def flow_transformer(ctx: PipelineContext, df: DataFrame, cfg: dict) -> DataFram
     if op == "skip":
         return df.filter(F.lit(False))
     if op == "halt":
-        # validation gate: eager existence check (one cheap limit(1) action)
+        # validation gate: immediate existence check (one cheap limit(1) action)
         if df.limit(1).count() > 0:
             msg = cfg.get("message", "flow halt condition met")
             ctx.stats.error(msg)

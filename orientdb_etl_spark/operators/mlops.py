@@ -576,10 +576,7 @@ def profile_transformer(ctx: PipelineContext, df: DataFrame, cfg: dict) -> DataF
         # merge, query later); with them, the per-q answers
         k = int(cfg.get("k", 256))
         ubits = int(cfg.get("universeBits", 24))
-        sketch = P.qdigest_build(
-            df, cfg["valueField"], k, ubits,
-            eager=bool(cfg.get("quantiles")),
-        )
+        sketch = P.qdigest_build(df, cfg["valueField"], k, ubits)
         if not cfg.get("quantiles"):
             return sketch
         return P.qdigest_quantiles(
@@ -807,9 +804,6 @@ def unigram_lm_transformer(
             n_iter=int(cfg.get("iters", 2)),
             prune_to=None if prune is None else int(prune),
             prune_by=str(cfg.get("pruneBy", "count")),
-            # config pipelines run inside long-lived sessions: release
-            # the per-iteration EM caches instead of leaking them
-            eager=bool(cfg.get("eager", True)),
         )
     if mode == "segment":
         return unigram_segment(
@@ -1537,7 +1531,7 @@ def bt_rank_transformer(
     ctx: PipelineContext, df: DataFrame, cfg: dict
 ) -> DataFrame:
     """{"btRank": {"winnerField": "winner", "loserField": "loser",
-    "iters": 8, "countField": null, "eager": false}} — Bradley–Terry
+    "iters": 8, "countField": null}} — Bradley–Terry
     preference-strength leaderboard over a battle log (functions/
     mleval.py): one row per item with wins, games, normalized theta,
     rank."""
@@ -1550,7 +1544,6 @@ def bt_rank_transformer(
         count_col=cfg.get("countField"),
         iters=int(cfg.get("iters", 8)),
         round_to=int(cfg.get("roundTo", 6)),
-        eager=bool(cfg.get("eager", False)),
     )
 
 
@@ -1675,7 +1668,6 @@ def quality_classifier_transformer(
         n_max=n_max,
         iters=int(cfg.get("iters", 4)),
         lr=float(cfg.get("lr", 0.5)),
-        eager=True,  # pipelines are long-lived sessions: leak nothing
     )
     if cfg.get("weightsOnly"):
         return w
@@ -1724,7 +1716,6 @@ def doremi_transformer(
         lr=float(cfg.get("lr", 0.5)),
         eta=float(cfg.get("eta", 1.0)),
         smooth=float(cfg.get("smooth", 0.1)),
-        eager=True,  # pipelines are long-lived sessions: leak nothing
     )
 
 

@@ -119,7 +119,7 @@ def resolve_source(
 
     # --- resolve the byte source to a path --------------------------------
     # Staged lazily: table/query/jdbc/parquet-with-path extractors never
-    # consume the byte source, and stdin/http staging is an eager side
+    # consume the byte source, and stdin/http staging is an immediate side
     # effect that must not fire unless a path-based extractor needs it.
     needs_path = ext_name in ("row", "json", "csv") or (
         ext_name in ("parquet", "orc") and "path" not in ext_cfg

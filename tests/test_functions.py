@@ -1347,19 +1347,14 @@ def test_unigram_train_hand_example(spark):
 
 
 def test_unigram_train_is_lazy_and_covers_singles(spark):
-    """Construction runs zero jobs (everything in-plan: the vocab total
-    is a broadcast cross join, seed selection a TakeOrdered); every
-    character of the corpus survives as a single-char piece."""
+    """Every character of the corpus survives as a single-char piece."""
     from orientdb_etl_spark.functions.unigram import unigram_lm_train
 
     docs = spark.createDataFrame(
         [(1, "spark window hash"), (2, "window hash spark")],
         "doc_id int, text string",
     )
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup() or [])
     vocab = unigram_lm_train(docs, "text")
-    assert len(tracker.getJobIdsForGroup() or []) == before
     pieces = {r.piece for r in vocab.collect()}
     assert set("sparkwindowhash") <= pieces
 
@@ -2248,13 +2243,12 @@ def test_mmr_diversify_string_ids_and_single_job(spark):
 
 
 def test_unigram_train_eager_releases_caches_same_result(spark):
-    """eager=True must (a) return the same vocabulary as the lazy path,
-    and (b) persist NOTHING past the call — iteration state is pinned
-    driver-side per iteration (vocabulary-sized literal tables) and the
-    one grid cache is released before returning. The lazy path keeps
-    all n_iter+1 caches alive for the session (each is a lineage node
-    of the returned frame), which accumulates across a 289-query gate
-    run."""
+    """The trainer must (a) return the same vocabulary whatever the
+    input's partitioning, and (b) persist NOTHING past the call —
+    iteration state is pinned driver-side per iteration
+    (vocabulary-sized literal tables) and the grid and slot-array caches
+    are released before returning, so nothing accumulates across a
+    many-query session."""
     from orientdb_etl_spark.functions.unigram import unigram_lm_train
 
     docs = spark.createDataFrame(
@@ -2268,13 +2262,96 @@ def test_unigram_train_eager_releases_caches_same_result(spark):
     # survives the call" is the exact claim — and stricter.
     jjsc = spark.sparkContext._jsc
     before_ids = {int(k) for k in jjsc.getPersistentRDDs().keySet().toArray()}
-    eager = unigram_lm_train(docs, "text", n_iter=2, prune_to=3, eager=True)
-    rows_eager = {(r.piece, r.freq, r.logp) for r in eager.collect()}
+    one = unigram_lm_train(docs.coalesce(1), "text", n_iter=2, prune_to=3)
+    rows_one = {(r.piece, r.freq, r.logp) for r in one.collect()}
     after_ids = {int(k) for k in jjsc.getPersistentRDDs().keySet().toArray()}
     assert after_ids - before_ids == set()  # nothing NEW persisted
-    lazy = unigram_lm_train(docs, "text", n_iter=2, prune_to=3)
-    rows_lazy = {(r.piece, r.freq, r.logp) for r in lazy.collect()}
-    assert rows_eager == rows_lazy
+    spread = unigram_lm_train(
+        docs.repartition(3), "text", n_iter=2, prune_to=3
+    )
+    rows_spread = {(r.piece, r.freq, r.logp) for r in spread.collect()}
+    assert rows_one == rows_spread
+
+
+_NO_LEAK_CALLS = [
+    "unigram_lm_train",
+    "unigram_lm_train-prune_to",
+    "unigram_lm_train-prune_by_loss",
+    "train_quality_classifier",
+    "doremi_mixture",
+    "bradley_terry",
+    "qdigest_build",
+    "qdigest_merge",
+]
+
+
+@pytest.mark.parametrize("call", _NO_LEAK_CALLS)
+def test_no_cached_frame_survives_the_call(spark, call):
+    """Pipelines run many configs in one long-lived session, so a
+    function must not leave a cache entry behind: no NEW persistent RDD
+    survives the call plus a collect of its result. Local checkpoints
+    are exempt — they are lineage of the returned frame (the q-digest's
+    low levels) and the ContextCleaner frees them with it. Compares
+    persistent-RDD ID sets for the reason given in
+    test_unigram_train_eager_releases_caches_same_result."""
+    from orientdb_etl_spark.functions.doremi import doremi_mixture
+    from orientdb_etl_spark.functions.mleval import bradley_terry
+    from orientdb_etl_spark.functions.profiling import (
+        qdigest_build,
+        qdigest_merge,
+    )
+    from orientdb_etl_spark.functions.quality_clf import (
+        train_quality_classifier,
+    )
+    from orientdb_etl_spark.functions.unigram import unigram_lm_train
+
+    docs = spark.createDataFrame(
+        [
+            (1, "banana bandana cabana", 1, "a"),
+            (2, "ban banana band", 0, "b"),
+            (3, "cab nab banana", 1, "a"),
+            (4, "bad dab band", 0, "b"),
+        ],
+        "doc_id int, text string, label int, source string",
+    )
+    battles = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("a", "c"), ("c", "a")],
+        "winner string, loser string",
+    )
+    vals = spark.range(2000).selectExpr("id * 37 % 5000 AS v")
+    run = {
+        "unigram_lm_train": lambda: unigram_lm_train(docs, n_iter=2),
+        "unigram_lm_train-prune_to": lambda: unigram_lm_train(
+            docs, n_iter=2, prune_to=3
+        ),
+        "unigram_lm_train-prune_by_loss": lambda: unigram_lm_train(
+            docs, n_iter=2, prune_to=3, prune_by="loss"
+        ),
+        "train_quality_classifier": lambda: train_quality_classifier(
+            docs, buckets=16, iters=2
+        ),
+        "doremi_mixture": lambda: doremi_mixture(
+            docs, "source", buckets=16, ref_iters=1, iters=2
+        ),
+        "bradley_terry": lambda: bradley_terry(battles, iters=3),
+        "qdigest_build": lambda: qdigest_build(vals, "v", k=16),
+        "qdigest_merge": lambda: qdigest_merge(
+            qdigest_build(vals, "v", k=16),
+            qdigest_build(vals, "v", k=16),
+            k=16,
+        ),
+    }[call]
+    jjsc = spark.sparkContext._jsc
+    before = {int(k) for k in jjsc.getPersistentRDDs().keySet().toArray()}
+    run().collect()
+    after = jjsc.getPersistentRDDs()  # a snapshot map
+    left = {
+        int(k)
+        for k in after.keySet().toArray()
+        if int(k) not in before
+        and not after.get(k).rdd().isLocallyCheckpointed()
+    }
+    assert left == set()
 
 
 def test_unigram_prune_by_loss_differs_from_count_rank(spark):
@@ -2294,10 +2371,10 @@ def test_unigram_prune_by_loss_differs_from_count_rank(spark):
     text = " ".join(["xy"] * 20 + ["x"] * 30 + ["y"] * 30 + ["qz"] * 5)
     docs = spark.createDataFrame([(1, text)], "doc_id int, text string")
     by_count = unigram_lm_train(
-        docs, "text", n_iter=1, prune_to=1, eager=True
+        docs, "text", n_iter=1, prune_to=1
     )
     by_loss = unigram_lm_train(
-        docs, "text", n_iter=1, prune_to=1, prune_by="loss", eager=True
+        docs, "text", n_iter=1, prune_to=1, prune_by="loss"
     )
     cm = {r.piece for r in by_count.filter(F.length("piece") > 1).collect()}
     lm = {r.piece for r in by_loss.filter(F.length("piece") > 1).collect()}

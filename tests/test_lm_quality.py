@@ -167,7 +167,7 @@ def _toy_labeled(spark, n=60, flip=0):
 
 def test_quality_classifier_separates_toy_corpus(spark):
     df = _toy_labeled(spark)
-    w = train_quality_classifier(df, buckets=64, iters=4, lr=2.0, eager=True)
+    w = train_quality_classifier(df, buckets=64, iters=4, lr=2.0)
     assert w.count() == 65  # 64 hash slots + bias
     scored = score_quality(df, w, buckets=64)
     acc = scored.withColumn(
@@ -181,20 +181,20 @@ def test_quality_classifier_separates_toy_corpus(spark):
 
 
 def test_quality_classifier_trajectory_is_deterministic(spark):
-    """eager (driver-pinned weights) and lazy (cached lineage) must
-    produce the IDENTICAL integer weight table — the integer-pinning
-    guarantee the DuckDB oracle replays."""
+    """One partition or several, training must produce the IDENTICAL
+    integer weight table — the integer-pinning guarantee the DuckDB
+    oracle replays."""
     df = _toy_labeled(spark, flip=6)  # non-separable: gradients never die
     a = sorted(
         (r.b, r.w_nano)
         for r in train_quality_classifier(
-            df, buckets=32, iters=3, lr=1.5, eager=True
+            df.coalesce(1), buckets=32, iters=3, lr=1.5
         ).collect()
     )
     b = sorted(
         (r.b, r.w_nano)
         for r in train_quality_classifier(
-            df, buckets=32, iters=3, lr=1.5, eager=False
+            df.repartition(5), buckets=32, iters=3, lr=1.5
         ).collect()
     )
     assert a == b
@@ -328,7 +328,7 @@ def test_doremi_upweights_learnable_domain_and_stays_simplex(spark):
         r.source: r
         for r in doremi_mixture(
             df, "source", buckets=64, ref_iters=2, iters=3,
-            lr=2.0, eta=5.0, eager=True,
+            lr=2.0, eta=5.0,
         ).collect()
     }
     assert set(out) == {"clean", "noisy"}
@@ -351,8 +351,11 @@ def test_doremi_eager_lazy_parity_and_validations(spark):
 
     df = _doremi_corpus(spark, n=20)
     kw = dict(buckets=32, ref_iters=1, iters=2, lr=1.0, eta=2.0)
-    a = sorted(map(tuple, doremi_mixture(df, "source", eager=True, **kw).collect()))
-    b = sorted(map(tuple, doremi_mixture(df, "source", eager=False, **kw).collect()))
+    # the Group-DRO trajectory is integer-pinned: layout-free
+    one = doremi_mixture(df.coalesce(1), "source", **kw)
+    spread = doremi_mixture(df.repartition(5), "source", **kw)
+    a = sorted(map(tuple, one.collect()))
+    b = sorted(map(tuple, spread.collect()))
     assert a == b
     with pytest.raises(ValueError, match="iters"):
         doremi_mixture(df, "source", iters=0)
@@ -448,7 +451,7 @@ def test_doremi_matches_pure_python_replay(spark):
         r.source: (r.n_docs, r.excess_last, r.alpha_final, r.alpha)
         for r in doremi_mixture(
             df, "source", buckets=B, ref_iters=ref_iters, iters=iters,
-            lr=lr, eta=eta, smooth=c, eager=True,
+            lr=lr, eta=eta, smooth=c,
         ).collect()
     }
     assert got == want

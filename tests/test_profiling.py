@@ -790,7 +790,7 @@ def test_mad_outliers_and_weighted_percentiles_keep_null_key_groups(spark):
 def test_qdigest_guarantees_and_determinism(spark):
     """Q-digest invariants on a skewed corpus: mass conservation, the
     ≤3k node bound, never-undershoot at every quantile, overshoot
-    within universe_bits·n/k, and eager/lazy plan parity."""
+    within universe_bits·n/k, and the same sketch on any layout."""
     from pyspark.sql import functions as F
 
     from orientdb_etl_spark.functions.profiling import (
@@ -802,12 +802,12 @@ def test_qdigest_guarantees_and_determinism(spark):
     df = spark.range(8000).selectExpr("id % (id % 97 + 1) AS v")
     vals = sorted(r.v for r in df.collect())
     n, k, U = len(vals), 64, 7
-    sk = qdigest_build(df, "v", k=k, universe_bits=U, eager=True)
+    sk = qdigest_build(df, "v", k=k, universe_bits=U)
     assert sk.agg(F.sum("cnt")).first()[0] == n  # mass conserved
     assert sk.count() <= 3 * k
-    lazy = qdigest_build(df, "v", k=k, universe_bits=U, eager=False)
+    spread = qdigest_build(df.repartition(5), "v", k=k, universe_bits=U)
     assert sorted(map(tuple, sk.collect())) == sorted(
-        map(tuple, lazy.collect())
+        map(tuple, spread.collect())
     )
     qs = [0.05, 0.25, 0.5, 0.75, 0.95, 1.0]
     got = qdigest_quantiles(sk, qs, k=k, universe_bits=U).collect()
@@ -834,11 +834,7 @@ def test_qdigest_merge_matches_union_guarantees(spark):
     b = spark.range(3000, 5000).selectExpr("id % 900 AS v")
     k, U = 64, 10
     m = qdigest_merge(
-        qdigest_build(a, "v", k, U, eager=True),
-        qdigest_build(b, "v", k, U, eager=True),
-        k,
-        U,
-        eager=True,
+        qdigest_build(a, "v", k, U), qdigest_build(b, "v", k, U), k, U
     )
     vals = sorted(
         r.v for r in a.unionByName(b).collect()
@@ -874,7 +870,7 @@ def test_qdigest_validations_and_config(spark):
         qdigest_build(
             spark.createDataFrame([(None,)], "v long"), "v", universe_bits=5
         )
-    sk = qdigest_build(df, "v", k=16, universe_bits=7, eager=True)
+    sk = qdigest_build(df, "v", k=16, universe_bits=7)
     with pytest.raises(ValueError, match="non-empty"):
         qdigest_quantiles(sk, [])
     with pytest.raises(ValueError, match="in \\(0, 1\\]"):

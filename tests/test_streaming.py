@@ -1121,9 +1121,8 @@ def test_stream_pairs_bt_equals_batch_and_epoch_drop_witness(spark, tmp_path):
         read_stream_pairs(spark, f"{base}/out", "winner", "loser"),
         count_col="n",
         iters=4,
-        eager=True,
     )
-    batch = bradley_terry(alls, iters=4, eager=True)
+    batch = bradley_terry(alls, iters=4)
     assert streamed.exceptAll(batch).count() == 0
     assert batch.exceptAll(streamed).count() == 0
     # negative witness: drop one epoch, the leaderboards must diverge
@@ -1136,7 +1135,6 @@ def test_stream_pairs_bt_equals_batch_and_epoch_drop_witness(spark, tmp_path):
         read_stream_pairs(spark, f"{base}/out", "winner", "loser"),
         count_col="n",
         iters=4,
-        eager=True,
     )
     assert (
         broken.exceptAll(batch).count() + batch.exceptAll(broken).count()

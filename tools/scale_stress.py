@@ -614,7 +614,7 @@ def main() -> None:
     t0 = time.time()
     labeled = big.withColumn("label", (F.col("doc_id") % 2 == 0).cast("int"))
     wtab = train_quality_classifier(
-        labeled, buckets=1024, iters=3, lr=1.0, eager=True
+        labeled, buckets=1024, iters=3, lr=1.0
     )
     out["clf_weight_slots"] = wtab.count()
     out["t_clf_train"] = round(time.time() - t0, 2)
@@ -643,7 +643,7 @@ def main() -> None:
     )
     mix = doremi_mixture(
         domained, "dom", buckets=1024, ref_iters=1, iters=2,
-        lr=1.0, eta=2.0, eager=True,
+        lr=1.0, eta=2.0,
     )
     rows = mix.collect()  # domain-count-bounded by construction
     out["doremi_domains"] = len(rows)
@@ -668,7 +668,7 @@ def main() -> None:
     t0 = time.time()
     qk, qu = 512, 20
     chars = big.select(F.length("text").cast("long").alias("n_chars"))
-    sk = qdigest_build(chars, "n_chars", k=qk, universe_bits=qu, eager=True)
+    sk = qdigest_build(chars, "n_chars", k=qk, universe_bits=qu)
     n_mass = sk.agg(F.sum("cnt")).first()[0]
     out["qdigest_nodes"] = sk.count()  # MUST be <= 3k
     out["qdigest_mass"] = n_mass

@@ -367,6 +367,8 @@ HEADLINE = [
     # round-9's largest local win besides unigram_lm_loss (listed
     # above), added so CORE can carry it
     "wordpiece_merges",
+    # the parquet merge sink (one windowed write pass, no cache barrier)
+    "merge_sink",
 ]
 
 # The DRIVER-DEFAULT capture set: every driver-gate family plus the most
@@ -466,6 +468,8 @@ CORE = [
     # verifies them (additions only)
     "unigram_lm_loss",
     "wordpiece_merges",
+    # the parquet merge sink (one windowed write pass, no cache barrier)
+    "merge_sink",
 ]
 
 

@@ -156,11 +156,11 @@ def run_loader(
             # batch MERGE sink: last-writer-wins upsert by key into the
             # hash-bucket-partitioned parquet layout — the SAME callback
             # the streaming side uses (streaming/ops.py:foreach_batch_upsert),
-            # so batch re-runs of a merge pipeline are idempotent and only
-            # the touched bucket partitions are read or rewritten (at real
-            # scale this maps onto Delta/Iceberg MERGE INTO; plain parquet
-            # keeps the engine dependency-free here). ``keys`` is required;
-            # ``orderBy`` picks the winner inside one batch (newest wins).
+            # so re-runs are idempotent (NULL keys too) and one windowed
+            # write pass, with no cache, reads and rewrites only touched
+            # bucket partitions (≈ Delta/Iceberg MERGE INTO on plain
+            # parquet). ``keys`` is required; batch rows beat target rows,
+            # and ``orderBy`` picks the winner inside a batch (newest wins).
             from orientdb_etl_spark.streaming.ops import foreach_batch_upsert
 
             if not cfg.get("keys"):

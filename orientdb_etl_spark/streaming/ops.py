@@ -159,22 +159,29 @@ def foreach_batch_upsert(
     The target is laid out partitioned by ``_kb`` — a stable hash bucket
     of the key (``pmod(xxhash64(keys), num_buckets)``). Each batch:
 
-    1. dedups per key (newest ``order_col`` wins),
-    2. computes its touched buckets (≤ ``num_buckets`` distinct values),
+    1. tags its raw rows with ``_kb`` (a function of the key alone, so
+       in-batch duplicates cannot change the touched set),
+    2. collects its touched buckets (≤ ``num_buckets`` distinct values),
     3. reads ONLY those partitions of the target (partition pruning),
-    4. anti-joins replaced keys and unions the batch,
+    4. keeps one row per key in ONE window over those target rows and the
+       batch: batch rows beat target rows, and inside the batch the
+       newest ``order_col`` wins (an arbitrary row without one),
     5. rewrites ONLY the touched partitions via dynamic partition
        overwrite — untouched partitions are never read, moved, or deleted.
 
-    Idempotent under batch replay (same input ⇒ same partition contents),
-    which is what makes it safe with checkpoint recovery. Commit is
-    per-partition-directory (Spark's dynamic overwrite), so a crash
-    mid-write leaves non-touched partitions intact — there is no
-    whole-table delete-then-rename window. Missing target is detected
-    explicitly through the Hadoop FS API; real read errors propagate
-    instead of silently degrading to "first batch". At real scale the
-    same callback maps onto Delta/Iceberg ``MERGE INTO``; plain-parquet
-    bucketed partitions keep the engine dependency-free here.
+    No cache barrier sits between the read and the write of the same
+    partitions: dynamic overwrite stages its output under
+    ``.spark-staging-*`` and swaps partition directories only at job
+    commit, after every task has read its input, so a failed write leaves
+    the target as it was and a crash never opens a whole-table
+    delete-then-rename window. Idempotent under batch replay (same input
+    ⇒ same partition contents), NULL keys included because the window
+    groups them as one key; this is what makes it safe with checkpoint
+    recovery. Missing target is detected explicitly
+    through the Hadoop FS API; real read errors propagate instead of
+    silently degrading to "first batch". At real scale the same callback
+    maps onto Delta/Iceberg ``MERGE INTO``; plain-parquet bucketed
+    partitions keep the engine dependency-free here.
 
     ``num_buckets`` bounds the one driver-side collect below (the
     touched-bucket list, ≤ num_buckets ints); it is capped so a
@@ -194,20 +201,10 @@ def foreach_batch_upsert(
         from pyspark.sql import functions as F
 
         spark = batch_df.sparkSession
-        batch = batch_df
-        if order_col:
-            w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
-            batch = (
-                batch.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        else:
-            batch = batch.dropDuplicates(key_cols)
-        batch = batch.withColumn(
+        batch = batch_df.withColumn(
             "_kb", F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets))
-        )
-
+        ).withColumn("_src", F.lit(1))
+        rows = batch
         if _hadoop_path_exists(spark, target_path):
             touched = [
                 r["_kb"] for r in batch.select("_kb").distinct().collect()
@@ -215,21 +212,22 @@ def foreach_batch_upsert(
             current = spark.read.parquet(target_path).filter(
                 F.col("_kb").isin(touched)
             )
-            keep = current.join(batch.select(*key_cols), key_cols, "left_anti")
-            merged = keep.unionByName(batch, allowMissingColumns=True)
-        else:
-            merged = batch
-        # materialization barrier: the write replaces partitions the plan
-        # reads from, so pin the merged generation first
-        merged.cache()
-        merged.count()
+            rows = current.withColumn("_src", F.lit(0)).unionByName(
+                batch, allowMissingColumns=True
+            )
+        order = ["_src"] + ([order_col] if order_col else [])
+        w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order])
+        merged = (
+            rows.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_src")
+        )
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             merged.write.mode("overwrite").partitionBy("_kb").parquet(target_path)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            merged.unpersist()
 
     return fn
 

@@ -275,6 +275,94 @@ def test_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     assert state[0] == "v2" and len(state) == 20
 
 
+def test_foreach_batch_upsert_null_key_replay_is_idempotent(spark, tmp_path):
+    """A NULL key is one key: replaying a batch that holds one replaces
+    that row instead of appending a second, and a later batch updates it."""
+    from orientdb_etl_spark.streaming import foreach_batch_upsert
+
+    target = str(tmp_path / "null_key_target")
+    fn = foreach_batch_upsert(target, ["k"])
+
+    def rows():
+        return sorted(
+            ((r.k, r.v) for r in spark.read.parquet(target).collect()),
+            key=lambda t: (t[0] is None, t[0] or 0),
+        )
+
+    b1 = spark.createDataFrame([(1, "a"), (None, "x")], "k int, v string")
+    fn(b1, 0)
+    fn(b1, 0)
+    assert rows() == [(1, "a"), (None, "x")]
+
+    fn(spark.createDataFrame([(None, "y")], "k int, v string"), 1)
+    assert rows() == [(1, "a"), (None, "y")]
+
+
+def test_foreach_batch_upsert_job_count_and_no_cache(spark, tmp_path):
+    """One merge of a small batch into an existing target is a handful of
+    jobs (touched collect, schema read, the windowed write) and leaves no
+    persistent RDD behind: there is no cache barrier before the write."""
+    from orientdb_etl_spark.streaming import foreach_batch_upsert
+
+    target = str(tmp_path / "job_count_target")
+    fn = foreach_batch_upsert(target, ["k"], order_col="seq", num_buckets=8)
+    fn(spark.createDataFrame([(i, "v", 0) for i in range(20)],
+                             "k int, v string, seq int"), 0)
+    batch = spark.createDataFrame(
+        [(0, "v1", 1), (0, "v2", 2), (25, "new", 1)], "k int, v string, seq int"
+    )
+
+    sc = spark.sparkContext
+    jjsc = sc._jsc
+    before = {int(k) for k in jjsc.getPersistentRDDs().keySet().toArray()}
+    group = "upsert_job_count_probe"
+    sc.setJobGroup(group, "count the jobs of one merge")
+    try:
+        fn(batch, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    after = {int(k) for k in jjsc.getPersistentRDDs().keySet().toArray()}
+
+    assert len(jobs) <= 5, jobs
+    assert after - before == set()
+    state = {r.k: r.v for r in spark.read.parquet(target).collect()}
+    assert len(state) == 21 and state[0] == "v2" and state[25] == "new"
+
+
+def test_foreach_batch_upsert_failed_write_leaves_target_unchanged(
+    spark, tmp_path
+):
+    """The write reads the partitions it replaces with no barrier in
+    between; a task that fails mid-write must abort the job before any
+    partition directory is swapped, so the target keeps its old rows."""
+    from pyspark.errors import PythonException
+    from pyspark.sql.types import StringType
+
+    from orientdb_etl_spark.streaming import foreach_batch_upsert
+
+    target = str(tmp_path / "failed_write_target")
+    fn = foreach_batch_upsert(target, ["k"], num_buckets=8)
+    fn(spark.createDataFrame([(i, f"v{i}") for i in range(20)],
+                             "k int, v string"), 0)
+    old = sorted((r.k, r.v) for r in spark.read.parquet(target).collect())
+
+    @F.udf(StringType())
+    def boom(k):
+        raise RuntimeError("value column failed")
+
+    # the touched collect needs only the key, so column pruning lets it
+    # pass; the UDF runs (and raises) inside the write job
+    batch = spark.range(0, 30).selectExpr("CAST(id AS INT) AS k")
+    batch = batch.withColumn("v", boom("k"))
+    assert len(batch.select("k").distinct().collect()) == 30
+    with pytest.raises(PythonException, match="value column failed"):
+        fn(batch, 1)
+
+    assert sorted((r.k, r.v) for r in spark.read.parquet(target).collect()) == old
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") != "dynamic"
+
+
 def test_stream_enrich_matches_batch_join(spark, events_batch):
     dim = spark.createDataFrame(
         [(i, f"seg{i % 3}") for i in range(15)], "k long, seg string"

@@ -14,7 +14,6 @@ from orientdb_etl_spark.functions.dedup import (
     incremental_dedup,
     incremental_near_dedup,
     minhash_lsh_dedup,
-    minhash_signatures,
     ngram_jaccard_pairs,
     semantic_dedup,
     simhash_dedup,
@@ -52,7 +51,6 @@ __all__ = [
     "language_id",
     "lsh_bucketed_topk",
     "minhash_lsh_dedup",
-    "minhash_signatures",
     "ngram_jaccard_pairs",
     "pack_greedy",
     "pack_offsets",

@@ -182,50 +182,6 @@ def corpus_dedup_pipeline(
 # --------------------------------------------------------------------------
 
 
-def _shingles_sql(col: str, k: int) -> str:
-    """Character k-shingle array as a SQL fragment — pure expression (no
-    UDF): transform(sequence(1, len-k+1), i -> substring(text, i, k))."""
-    return (
-        f"transform(sequence(1, greatest(length({col}) - {k} + 1, 1)), "
-        f"i -> substring({col}, i, {k}))"
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    num_perm: int = 64,
-    shingle_k: int = 5,
-    out_col: str = "minhash",
-) -> DataFrame:
-    """MinHash signature per row, fully JVM-side.
-
-    Each distinct shingle is hashed ONCE (xxhash64 → residue mod the
-    32-bit prime 4294967291); the num_perm "permutations" are affine maps
-    h*(2p+1)+p over that prime field — the standard universal-hash-family
-    substitute for explicit permutations, and overflow-free under ANSI
-    arithmetic (residue < 2^32, multiplier ≤ 2*num_perm). Cost is one
-    string hash per shingle plus num_perm multiply-adds, all inside
-    codegen. One narrow projection, no shuffle, no Python.
-    """
-    prime = 4294967291
-    sig = F.expr(
-        f"transform(sequence(0, {num_perm - 1}), "
-        f"p -> array_min(transform(_hashes, h -> pmod(h * (2 * p + 1) + p, {prime}))))"
-    )
-    return (
-        df.withColumn(
-            "_hashes",
-            F.expr(
-                f"transform(array_distinct({_shingles_sql(text_col, shingle_k)}), "
-                f"s -> pmod(xxhash64(s), {prime}))"
-            ),
-        )
-        .withColumn(out_col, sig)
-        .drop("_hashes")
-    )
-
-
 def minhash_signatures_portable(
     df: DataFrame,
     text_col: str,
@@ -235,13 +191,13 @@ def minhash_signatures_portable(
 ) -> DataFrame:
     """Cross-engine-checkable MinHash signatures, pure expression.
 
-    Same construction as :func:`minhash_signatures` but the per-shingle
-    hash is a base-31 polynomial over character codepoints instead of
-    xxhash64, so the identical recurrence is expressible in any ANSI-ish
-    SQL dialect (the DuckDB oracle mirrors it with list_reduce). That
-    makes the MinHash recurrence itself hash-verifiable end-to-end — the
-    production path (:func:`minhash_signatures_fast`, Arrow-batched)
-    stays for bench/scale.
+    Character k-shingles, each hashed once, then ``num_perm`` affine maps
+    over a prime field; the per-shingle hash is a base-31 polynomial over
+    character codepoints, so the identical recurrence is expressible in
+    any ANSI-ish SQL dialect (the DuckDB oracle mirrors it with
+    list_reduce). That makes the MinHash recurrence itself
+    hash-verifiable end-to-end — the production path
+    (:func:`minhash_signatures_fast`, Arrow-batched) stays for bench/scale.
 
     h(s)   = fold(chars(s), 0, (acc, c) -> acc*31 + code(c)) mod p
     sig[j] = min over distinct shingle hashes h of (h*(2j+1) + j) mod p
@@ -323,9 +279,8 @@ def minhash_signatures_fast(
     interpreted mode (no whole-stage codegen), which measured ~100× slower
     than this Arrow-batched numpy path (sliding-window byte view →
     polynomial rolling hash → num_perm affine maps, all uint64-wraparound,
-    deterministic across runs/executors). Falls back conceptually to
-    :func:`minhash_signatures` (pure-expression variant, kept for
-    reference/oracle symmetry).
+    deterministic across runs/executors). The pure-expression twin that
+    an SQL oracle can replay is :func:`minhash_signatures_portable`.
     """
     from pyspark.sql import types as T
 
@@ -701,32 +656,11 @@ def minhash_lsh_dedup(
 # --------------------------------------------------------------------------
 
 
-def simhash_col(text_col: str, bits: int = 64) -> F.Column:
-    """64-bit SimHash as a pure expression: tokens → per-bit vote sum →
-    sign bit. aggregate() folds token hashes into a bit-count array without
-    leaving the JVM."""
-    tokens = f"array_distinct(split(lower({text_col}), '\\\\s+'))"
-    # votes[b] = sum over tokens of (bit b of xxhash64(token) ? 1 : -1)
-    votes = (
-        f"aggregate({tokens}, "
-        f"array_repeat(0L, {bits}), "
-        f"(acc, t) -> zip_with(acc, transform(sequence(0, {bits - 1}), "
-        f"b -> CASE WHEN shiftright(xxhash64(t), b) % 2 != 0 THEN 1L ELSE -1L END), "
-        f"(a, v) -> a + v))"
-    )
-    # fold sign bits into one BIGINT
-    return F.expr(
-        f"aggregate(zip_with({votes}, sequence(0, {bits - 1}), "
-        f"(v, b) -> CASE WHEN v > 0 THEN shiftleft(1L, cast(b AS int)) ELSE 0L END), "
-        f"0L, (acc, x) -> acc | x)"
-    )
-
-
 def simhash_fast(text_col: str, seed: int = 0) -> F.Column:
     """64-bit SimHash via Arrow/numpy (FNV-1a token hashes → per-bit vote
-    matrix → sign bits). The pure-expression variant (:func:`simhash_col`)
-    evaluates its per-token × per-bit lambdas interpreted — measured ~5×
-    slower; this path does the same votes as one vectorized matmul."""
+    matrix → sign bits). A pure-expression form would evaluate its
+    per-token × per-bit lambdas interpreted — measured ~5× slower; this
+    path does the same votes as one vectorized matmul."""
 
     import hashlib
 

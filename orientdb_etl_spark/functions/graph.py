@@ -14,6 +14,10 @@ formulation of Malewicz et al., SIGMOD'10, expressed relationally).
 Loops run on the shapes of :mod:`~orientdb_etl_spark.functions.iterate`;
 at real scale the edge frame is the only large operand and it is
 shuffle-partitioned once on ``src`` and reused.
+
+Every function reads its edges through one normal form, ``_undirected``
+(with its ``_degrees`` and ``_triangles``) or ``_directed``, so all
+functions of a kind treat duplicates, self-loops and NULL endpoints alike.
 """
 
 from __future__ import annotations
@@ -62,11 +66,37 @@ def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Total triangle count of the undirected simple graph, one row
-    ``(n_triangles)``.
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected simple graph as canonical ``(a, b)`` rows with
+    ``a < b``: orientation folded by least/greatest, self-loops dropped,
+    duplicates collapsed by one distinct (one shuffle). ``least`` and
+    ``greatest`` skip NULLs, so an edge with one NULL endpoint folds to
+    a self-loop and an all-NULL edge fails the comparison — both drop
+    with the self-loops."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .where(F.col("a") < F.col("b"))
+        .distinct()
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """``(v, d)``: the degree of every vertex of a canonical edge frame
+    (one map-side-combinable aggregation)."""
+    return (
+        und.select(F.col("a").alias("v"))
+        .unionAll(und.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _triangles(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """One ``(u, p, q)`` row per triangle of a canonical edge frame,
+    ``u`` its lowest-ordered vertex.
 
     Degree-ordered orientation (Suri & Vassilvitskii, WWW'11): every edge
     is directed from its lower-(degree, id) endpoint to the higher one, so
@@ -74,24 +104,9 @@ def triangle_count(
     and per-vertex out-degree is O(√m) even on power-law graphs. That
     bounds the wedge explosion (the "curse of the last reducer"): the
     wedge join fans out by oriented out-degree, not by raw hub degree.
-    Plan: dedup to canonical edges, one degree aggregation joined back
-    (broadcastable — |vertices| rows), wedge self-join on the low vertex,
-    closing-edge semi-join, single count.
+    Plan: the degree table joined onto both endpoints (broadcastable —
+    |vertices| rows), wedge self-join on the low vertex, closing-edge join.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionAll(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
     ranked = (
         und.join(deg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a")
         .join(deg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
@@ -110,13 +125,41 @@ def triangle_count(
     wedges = x.join(
         y,
         (F.col("x.u") == F.col("y.u")) & (F.col("x._ow") < F.col("y._ow")),
-    ).select(F.col("x.w").alias("p"), F.col("y.w").alias("q"))
+    ).select(F.col("x.u").alias("u"), F.col("x.w").alias("p"), F.col("y.w").alias("q"))
     closing = und.select(F.col("a").alias("p2"), F.col("b").alias("q2"))
-    tri = wedges.join(
+    return wedges.join(
         closing,
         (F.least("p", "q") == F.col("p2")) & (F.greatest("p", "q") == F.col("q2")),
+    ).select("u", "p", "q")
+
+
+def _directed(edges: DataFrame, src: str, dst: str) -> tuple[DataFrame, DataFrame]:
+    """The directed graph as ``(src, dst)`` rows — parallel edges counted
+    once, edges with a NULL endpoint dropped — and its vertex set
+    ``(id)``, each eagerly checkpointed: every directed function reads
+    both in every round."""
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+        .localCheckpoint(eager=True)
     )
-    return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
+    nodes = (
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return e, nodes
+
+
+def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Total triangle count of the undirected simple graph, one row
+    ``(n_triangles)``: the rows of :func:`_triangles` counted."""
+    und = _undirected(edges, src, dst)
+    return _triangles(und, _degrees(und)).agg(
+        F.count(F.lit(1)).alias("n_triangles")
+    )
 
 
 def pagerank(
@@ -130,10 +173,11 @@ def pagerank(
     """Fixed-iteration PageRank → (id, rank).
 
     r_{t+1}(v) = (1-d)/N + d · Σ_{u→v} r_t(u) / outdeg(u), with uniform
-    r_0 = 1/N. Parallel edges count once (the edge set is deduplicated) and
-    dangling-vertex mass is NOT redistributed — rank totals < 1 when sinks
-    exist; both choices are deterministic and mirrored exactly by the SQL
-    oracle (a recursive CTE driving the same recurrence).
+    r_0 = 1/N. Parallel edges count once, edges with a NULL endpoint drop
+    (the :func:`_directed` edge set) and an empty graph returns an empty
+    frame. Dangling-vertex mass is NOT redistributed — rank totals < 1
+    when sinks exist; both choices are deterministic and mirrored exactly
+    by the SQL oracle (a recursive CTE driving the same recurrence).
 
     Fixed ``iterations`` (not convergence-tested) keeps the run
     deterministic and avoids a per-iteration driver action. Each
@@ -151,15 +195,7 @@ def pagerank(
     per-node column attached once, so the per-iteration cost is
     identical to the uniform case.
     """
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("_src").alias("id"))
-        .union(e.select(F.col("_dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
+    e, nodes = _directed(edges, src, dst)
     if seeds is not None:
         seed_ids = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
         marked = nodes.join(
@@ -175,17 +211,20 @@ def pagerank(
             .alias("_p"),
         ).localCheckpoint(eager=True)
     else:
+        n_nodes = nodes.count()
+        if n_nodes == 0:
+            return nodes.select("id", F.lit(0.0).alias("rank"))
         nodes = nodes.withColumn("_p", F.lit(1.0 / n_nodes))
-    out_deg = e.groupBy(F.col("_src").alias("id")).agg(
+    out_deg = e.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("_deg")
     )
     ranks = nodes.select("id", F.col("_p").alias("rank"))
     for it in range(1, iterations + 1):
         contrib = (
             ranks.join(out_deg, "id")
-            .join(e, F.col("id") == F.col("_src"))
+            .join(e, F.col("id") == F.col("src"))
             .select(
-                F.col("_dst").alias("id"),
+                F.col("dst").alias("id"),
                 (F.col("rank") / F.col("_deg")).alias("_c"),
             )
             .groupBy("id")
@@ -316,13 +355,15 @@ def bfs_transformer(ctx: PipelineContext, df: DataFrame, cfg: dict) -> DataFrame
 
 
 def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Undirected simple-graph normal form: both orientations of every
-    edge, self-loops dropped, duplicates collapsed — the input contract
-    for :func:`kcore` (and the same shape triangle_count builds
-    internally). One distinct (= one shuffle)."""
-    fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
-    return fwd.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
+    """Undirected simple-graph normal form with both orientations: the
+    canonical edge set of :func:`_undirected` unioned with its mirror, as
+    ``(src, dst)`` rows. The two halves are disjoint (``src < dst`` and
+    ``src > dst``), so the union is still a set — the input contract of
+    :func:`kcore`'s fixpoint. One distinct (= one shuffle)."""
+    und = _undirected(edges, src, dst)
+    return und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
 
 
 def kcore(
@@ -648,8 +689,8 @@ def modularity(
     n_nodes, n_communities, intra_edges, q_modularity)``.
 
     Scale shape: three aggregation passes, all map-side combinable —
-    the canonical undirected edge set (least/greatest + distinct, one
-    shuffle), degrees joined to labels for per-community degree sums,
+    the canonical undirected edge set (:func:`_undirected`, one
+    shuffle), its degrees joined to labels for per-community degree sums,
     and intra-community edge counts via two label equi-joins on the
     edge endpoints. Every aggregate is an exact BIGINT; the final Q is
     one fixed chain of double ops (squares cast to double before
@@ -657,41 +698,28 @@ def modularity(
     vertices raise — a partition that misses graph nodes is a caller
     bug, not a quantity to silently mis-normalize.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_a"),
-            F.greatest(F.col(src), F.col(dst)).alias("_b"),
-        )
-        .where(F.col("_a") != F.col("_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     lab = labels.select(
-        F.col(node_col).alias("_n"), F.col(label_col).alias("_lab")
+        F.col(node_col).alias("v"), F.col(label_col).alias("_lab")
     )
-    deg = (
-        und.select(F.col("_a").alias("_n"))
-        .unionAll(und.select(F.col("_b").alias("_n")))
-        .groupBy("_n")
-        .agg(F.count(F.lit(1)).alias("_deg"))
-    )
-    dlab = deg.join(lab, "_n", "left")
+    deg = _degrees(und)
+    dlab = deg.join(lab, "v", "left")
     n_unlabeled = dlab.where(F.col("_lab").isNull()).limit(1).count()
     if n_unlabeled:
         raise ValueError(
             "modularity: the partition misses vertices present in the "
             "edge set — label every graph node before scoring"
         )
-    comm = dlab.groupBy("_lab").agg(F.sum("_deg").alias("_dc"))
+    comm = dlab.groupBy("_lab").agg(F.sum("d").alias("_dc"))
     sums = comm.agg(
         F.count(F.lit(1)).alias("_nc"),
         F.sum(F.col("_dc") * F.col("_dc")).alias("_d2"),
     )
-    la = lab.select(F.col("_n").alias("_a"), F.col("_lab").alias("_la"))
-    lb = lab.select(F.col("_n").alias("_b"), F.col("_lab").alias("_lb"))
+    la = lab.select(F.col("v").alias("a"), F.col("_lab").alias("_la"))
+    lb = lab.select(F.col("v").alias("b"), F.col("_lab").alias("_lb"))
     intra = (
-        und.join(la, "_a")
-        .join(lb, "_b")
+        und.join(la, "a")
+        .join(lb, "b")
         .agg(
             F.sum(
                 F.when(F.col("_la") == F.col("_lb"), 1).otherwise(0)
@@ -732,35 +760,23 @@ def clustering_coefficient(
     Scale shape: the wedge count is one degree aggregation with exact
     BIGINT arithmetic (Σ d(d−1)/2 of integer degrees — overflow only
     past ~3·10⁹-degree hubs, far beyond any simple graph that fits);
-    triangles reuse :func:`triangle_count`'s degree-ordered orientation
-    (wedge fan-out bounded O(√m), Suri & Vassilvitskii WWW'11). The
+    triangles are the rows of :func:`_triangles` over the same
+    checkpointed canonical edge set and degree table (degree-ordered
+    orientation, wedge fan-out bounded O(√m)). The
     final ratio is a fixed double chain over the three exact integers,
     so the oracle replays it bit-identically. A wedge-free graph
     (all degrees <= 1) yields NULL, not a division blow-up.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_a"),
-            F.greatest(F.col(src), F.col(dst)).alias("_b"),
-        )
-        .where(F.col("_a") != F.col("_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("_a").alias("_n"))
-        .unionAll(und.select(F.col("_b").alias("_n")))
-        .groupBy("_n")
-        .agg(F.count(F.lit(1)).alias("_d"))
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
+    deg = _degrees(und)
     stats = deg.agg(
         F.count(F.lit(1)).alias("_nv"),
         # d(d-1) is even, so integer DIV keeps the wedge count an exact
         # BIGINT at any scale (no double round-trip)
-        F.expr("sum(_d * (_d - 1) DIV 2)").cast("bigint").alias("_w"),
+        F.expr("sum(d * (d - 1) DIV 2)").cast("bigint").alias("_w"),
     )
     m = und.agg(F.count(F.lit(1)).alias("_m"))
-    tri = triangle_count(und, "_a", "_b")
+    tri = _triangles(und, deg).agg(F.count(F.lit(1)).alias("n_triangles"))
     d = lambda c: c.cast("double")  # noqa: E731
     cc = F.when(
         F.col("_w") > 0,
@@ -789,51 +805,17 @@ def local_clustering_coefficient(
     ``(node, degree, triangles, lcc)`` for every vertex; ``lcc`` is
     NULL for degree-<2 vertices (no wedge to close).
 
-    Scale shape: same degree-ordered orientation as
-    :func:`triangle_count` (wedge fan-out bounded O(√m), Suri &
-    Vassilvitskii WWW'11) — but instead of counting closed wedges, each
-    closed triangle emits its THREE endpoints (a 3× map expansion on
+    Scale shape: the rows of :func:`_triangles` (degree-ordered
+    orientation, wedge fan-out bounded O(√m)) — but instead of counting
+    them, each triangle emits its THREE endpoints (a 3× map expansion on
     the triangle stream, which is the small stream), followed by one
     hash aggregation per vertex and a broadcastable join back onto the
     degree table. t_v and d_v are exact BIGINTs; the ratio is one fixed
     double chain, so the oracle replays it bit-identically.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionAll(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ranked = und.join(
-        deg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a"
-    ).join(deg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
-    ra = F.struct(F.col("da").alias("d"), F.col("a").alias("v"))
-    rb = F.struct(F.col("db").alias("d"), F.col("b").alias("v"))
-    a_first = ra < rb
-    oriented = ranked.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("w"),
-        F.when(a_first, rb).otherwise(ra).alias("_ow"),
-    )
-    x, y = oriented.alias("x"), oriented.alias("y")
-    wedges = x.join(
-        y,
-        (F.col("x.u") == F.col("y.u")) & (F.col("x._ow") < F.col("y._ow")),
-    ).select(F.col("x.u").alias("u"), F.col("x.w").alias("p"), F.col("y.w").alias("q"))
-    closing = und.select(F.col("a").alias("p2"), F.col("b").alias("q2"))
-    tri = wedges.join(
-        closing,
-        (F.least("p", "q") == F.col("p2")) & (F.greatest("p", "q") == F.col("q2")),
-    ).select("u", "p", "q")
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
+    deg = _degrees(und)
+    tri = _triangles(und, deg)
     per_v = (
         tri.select(F.col("u").alias("v"))
         .unionAll(tri.select(F.col("p").alias("v")))
@@ -874,38 +856,25 @@ def assortativity(
 
     Scale shape: one degree aggregation, one broadcastable degree join
     per endpoint, then a single global fold of exact BIGINT moments
-    (Σj, Σj², Σjk over the 2m directed pair representation — exact
+    (Σj, Σj², Σjk over the 2m ordered endpoint pairs, each canonical
+    edge folding in both of its orientations — exact
     while ``Σd² < 2⁶³``, i.e. any graph short of ~10⁹-degree hubs on
     10⁹ edges; beyond that the moments need doubles, documented). The
     coefficient is a fixed chain of double ops over those integers, so
     the oracle replays it bit-identically.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_a"),
-            F.greatest(F.col(src), F.col(dst)).alias("_b"),
-        )
-        .where(F.col("_a") != F.col("_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("_a").alias("_n"))
-        .unionAll(und.select(F.col("_b").alias("_n")))
-        .groupBy("_n")
-        .agg(F.count(F.lit(1)).alias("_d"))
-    )
-    # both directions: each undirected edge contributes (d_a, d_b) and
-    # (d_b, d_a), making the j/k marginals identical by construction
-    directed = und.unionAll(und.select(F.col("_b").alias("_a"), F.col("_a").alias("_b")))
-    dj = deg.select(F.col("_n").alias("_a"), F.col("_d").alias("_dj"))
-    dk = deg.select(F.col("_n").alias("_b"), F.col("_d").alias("_dk"))
-    pairs = directed.join(dj, "_a").join(dk, "_b")
-    mom = pairs.agg(
-        F.count(F.lit(1)).alias("_m2"),
-        F.sum("_dj").alias("_s1"),
-        F.sum(F.col("_dj") * F.col("_dj")).alias("_s2"),
-        F.sum(F.col("_dj") * F.col("_dk")).alias("_s11"),
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
+    deg = _degrees(und)
+    dj = deg.select(F.col("v").alias("a"), F.col("d").alias("_dj"))
+    dk = deg.select(F.col("v").alias("b"), F.col("d").alias("_dk"))
+    # each undirected edge stands for the pairs (d_a, d_b) and (d_b, d_a),
+    # which makes the j/k marginals identical by construction; both
+    # orientations fold into the same integer sums, so no mirror frame
+    mom = und.join(dj, "a").join(dk, "b").agg(
+        (F.count(F.lit(1)) * 2).alias("_m2"),
+        F.sum(F.col("_dj") + F.col("_dk")).alias("_s1"),
+        F.sum(F.col("_dj") * F.col("_dj") + F.col("_dk") * F.col("_dk")).alias("_s2"),
+        (F.sum(F.col("_dj") * F.col("_dk")) * 2).alias("_s11"),
     )
     nv = deg.agg(F.count(F.lit(1)).alias("_nv"))
     d = lambda c: c.cast("double")  # noqa: E731
@@ -1116,18 +1085,7 @@ def scc(
     (one giant SCC + trim-able periphery — the FW-BW-Trim literature);
     the caps make the pathological case loud instead of silent.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e, verts = _directed(edges, src, dst)
     done = None
     remaining = verts
     for _ in range(int(max_phases)):
@@ -1215,24 +1173,13 @@ def hits(
     1's. Fixed ``iterations`` is the bounded-iteration rule (no
     convergence polling action per round).
     """
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("_s").alias("id"))
-        .union(e.select(F.col("_d").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes = _directed(edges, src, dst)
     hubs = nodes.withColumn("h", F.lit(1.0))
     auth = None
     for _ in range(int(iterations)):
         auth = (
-            e.join(hubs.withColumnRenamed("id", "_s"), "_s")
-            .groupBy(F.col("_d").alias("id"))
+            e.join(hubs.withColumnRenamed("id", "src"), "src")
+            .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("h").alias("a"))
         )
         auth = (
@@ -1241,8 +1188,8 @@ def hits(
             .localCheckpoint(eager=True)
         )
         hubs = (
-            e.join(auth.withColumnRenamed("id", "_d"), "_d")
-            .groupBy(F.col("_s").alias("id"))
+            e.join(auth.withColumnRenamed("id", "dst"), "dst")
+            .groupBy(F.col("src").alias("id"))
             .agg(F.sum("a").alias("h"))
         )
         hubs = (
@@ -1374,16 +1321,8 @@ def louvain_move_pass(
     """
     from orientdb_etl_spark.operators.relational import topk_per_group
 
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_a"),
-            F.greatest(F.col(src), F.col(dst)).alias("_b"),
-        )
-        .where(F.col("_a") != F.col("_b"))
-        .distinct()
-    )
-    ed = und.select(F.col("_a").alias("_u"), F.col("_b").alias("_v")).unionByName(
-        und.select(F.col("_b").alias("_u"), F.col("_a").alias("_v"))
+    ed = symmetrize(edges, src, dst).select(
+        F.col("src").alias("_u"), F.col("dst").alias("_v")
     ).localCheckpoint(eager=True)
     lab = labels.select(
         F.col(node_col).alias("_u"), F.col(label_col).alias("_l")

@@ -118,17 +118,6 @@ def doc_fingerprint(col: str | Column) -> Column:
     return F.md5(canon)
 
 
-def rolling_fingerprint(col: str | Column, window: int = 8) -> Column:
-    """Winnowing-style robust fingerprint: min xxhash64 over character
-    shingles — stable under small local edits (vs md5's avalanche)."""
-    c = F.col(col) if isinstance(col, str) else col
-    name = c._jc.toString() if hasattr(c, "_jc") else str(col)
-    return F.expr(
-        f"array_min(transform(sequence(1, greatest(length({name}) - {window} + 1, 1)), "
-        f"i -> xxhash64(substring({name}, i, {window}))))"
-    )
-
-
 _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _PHONE_RE = r"\+?[0-9][0-9()\-\s]{7,}[0-9]"
 _IP_RE = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"

@@ -15,7 +15,6 @@ from orientdb_etl_spark.streaming.ops import (
     stream_interval_join,
     streaming_dedup,
     tumbling_window_agg,
-    with_watermark,
 )
 from orientdb_etl_spark.streaming.pipeline import StreamingPipeline, stream_parquet
 
@@ -29,5 +28,4 @@ __all__ = [
     "stream_parquet",
     "streaming_dedup",
     "tumbling_window_agg",
-    "with_watermark",
 ]

@@ -21,12 +21,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
-    """Late-data policy: rows older than max(event time) - delay are
-    dropped from stateful operators downstream."""
-    return df.withWatermark(ts_col, delay)
-
-
 def tumbling_window_agg(
     df: DataFrame,
     ts_col: str,

@@ -2282,6 +2282,10 @@ _NO_LEAK_CALLS = [
     "bradley_terry",
     "qdigest_build",
     "qdigest_merge",
+    "wordpiece_train",
+    "kmeans_quantized",
+    "power_iteration_distributed",
+    "incremental_near_dedup",
 ]
 
 
@@ -2293,12 +2297,21 @@ def test_no_cached_frame_survives_the_call(spark, call):
     are exempt — they are lineage of the returned frame (the q-digest's
     low levels) and the ContextCleaner frees them with it. Compares
     persistent-RDD ID sets for the reason given in
-    test_unigram_train_eager_releases_caches_same_result."""
+    test_unigram_train_eager_releases_caches_same_result. A call that
+    returns no frame is run for its effect alone."""
+    from pyspark.sql import DataFrame
+
+    from orientdb_etl_spark.functions.bpe import wordpiece_train
+    from orientdb_etl_spark.functions.clustering import kmeans_quantized
+    from orientdb_etl_spark.functions.dedup import incremental_near_dedup
     from orientdb_etl_spark.functions.doremi import doremi_mixture
     from orientdb_etl_spark.functions.mleval import bradley_terry
     from orientdb_etl_spark.functions.profiling import (
         qdigest_build,
         qdigest_merge,
+    )
+    from orientdb_etl_spark.functions.projections import (
+        power_iteration_distributed,
     )
     from orientdb_etl_spark.functions.quality_clf import (
         train_quality_classifier,
@@ -2319,6 +2332,10 @@ def test_no_cached_frame_survives_the_call(spark, call):
         "winner string, loser string",
     )
     vals = spark.range(2000).selectExpr("id * 37 % 5000 AS v")
+    gram = spark.createDataFrame(
+        [(1, 1, 2.0), (1, 2, 1.0), (2, 1, 1.0), (2, 2, 2.0)],
+        "i int, j int, g double",
+    )
     run = {
         "unigram_lm_train": lambda: unigram_lm_train(docs, n_iter=2),
         "unigram_lm_train-prune_to": lambda: unigram_lm_train(
@@ -2340,10 +2357,23 @@ def test_no_cached_frame_survives_the_call(spark, call):
             qdigest_build(vals, "v", k=16),
             k=16,
         ),
+        "wordpiece_train": lambda: wordpiece_train(docs, "text", num_merges=2),
+        "kmeans_quantized": lambda: kmeans_quantized(
+            _toy_vectors(spark), "embedding", "vec_id", k=3, rounds=2
+        )[0],
+        "power_iteration_distributed": lambda: power_iteration_distributed(
+            gram, 2, steps=3
+        ),
+        "incremental_near_dedup": lambda: incremental_near_dedup(
+            docs.where("doc_id > 2"), docs.where("doc_id <= 2"), "text",
+            "doc_id", num_perm=16, bands=4, shingle_k=3,
+        ),
     }[call]
     jjsc = spark.sparkContext._jsc
     before = {int(k) for k in jjsc.getPersistentRDDs().keySet().toArray()}
-    run().collect()
+    out = run()
+    if isinstance(out, DataFrame):
+        out.collect()
     after = jjsc.getPersistentRDDs()  # a snapshot map
     left = {
         int(k)

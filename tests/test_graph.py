@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import orientdb_etl_spark.functions.graph as G
 from orientdb_etl_spark.functions.graph import degrees, pagerank
 
 
@@ -844,3 +845,83 @@ def test_louvain_move_pass_labels_output(spark):
 
     with _pytest.raises(ValueError):
         louvain_move_pass(edges, labels, output="bogus")
+
+
+# Every public graph function, called on an edge frame alone. Vertices
+# 1..3 / 4..6 are the two communities of the normal-form fixtures.
+_GRAPH_CALLS = {
+    "triangle_count": lambda e, lab: G.triangle_count(e),
+    "clustering_coefficient": lambda e, lab: G.clustering_coefficient(e),
+    "local_clustering_coefficient": lambda e, lab: G.local_clustering_coefficient(e),
+    "assortativity": lambda e, lab: G.assortativity(e),
+    "modularity": lambda e, lab: G.modularity(e, lab),
+    "louvain_move_pass": lambda e, lab: G.louvain_move_pass(e, lab),
+    "symmetrize": lambda e, lab: G.symmetrize(e),
+    "kcore": lambda e, lab: G.kcore(e, 2),
+    "label_propagation": lambda e, lab: G.label_propagation(e, rounds=3),
+    "neighborhood_function": lambda e, lab: G.neighborhood_function(e, radius=2),
+    "hyperball": lambda e, lab: G.hyperball(e, radius=2),
+    "pagerank": lambda e, lab: G.pagerank(e, iterations=5),
+    "hits": lambda e, lab: G.hits(e),
+    "scc": lambda e, lab: G.scc(e),
+}
+_DIRECTED = {"pagerank", "hits", "scc"}
+
+
+def _graph_rows(spark, name, pairs):
+    lab = spark.createDataFrame(
+        [(n, 0 if n <= 3 else 1) for n in range(1, 7)], "node long, label long"
+    )
+    e = spark.createDataFrame(pairs, "src long, dst long")
+    rows = _GRAPH_CALLS[name](e, lab).collect()
+    # doubles to 9 places: the two inputs may sum in different orders
+    return sorted(
+        (tuple(round(x, 9) if isinstance(x, float) else x for x in r) for r in rows),
+        key=repr,
+    )
+
+
+# rows on [] and on [(1, 1), (2, NULL)]: the undirected normal form is
+# empty on both; the directed one keeps vertex 1 with its self-loop
+_EMPTY_GRAPH_ROWS = {
+    "triangle_count": [(0,)],
+    "clustering_coefficient": [(0, 0, None, 0, None)],
+    "assortativity": [(0, 0, None)],
+    "modularity": [(0, 0, 0, None, None)],
+    "louvain_move_pass": [(None, 0, 0, 0, None, None, None)],
+}
+_LOOP_GRAPH_ROWS = {"pagerank": [(1, 1.0)], "hits": [(1, 1.0, 1.0)], "scc": [(1, 1)]}
+
+
+@pytest.mark.parametrize("case", ["empty", "self_loop_and_null"])
+@pytest.mark.parametrize("name", sorted(_GRAPH_CALLS))
+def test_graph_functions_on_degenerate_edge_lists(spark, name, case):
+    """An empty edge list is a graph with no vertices, so nothing divides
+    by its vertex count; a NULL endpoint is no vertex, so no function
+    ranks a NULL id or counts it in N."""
+    pairs = [] if case == "empty" else [(1, 1), (2, None)]
+    want = _EMPTY_GRAPH_ROWS.get(name, [])
+    if case != "empty" and name in _DIRECTED:
+        want = _LOOP_GRAPH_ROWS[name]
+    assert _graph_rows(spark, name, pairs) == want
+
+
+_CLEAN = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4)]
+_NULLS = [(None, 5), (5, None), (None, None)]
+
+
+@pytest.mark.parametrize("name", sorted(_GRAPH_CALLS))
+def test_graph_functions_see_one_normal_form(spark, name):
+    """Duplicates, NULL endpoints and (undirected) reversed duplicates and
+    self-loops are not part of the graph: every function returns the rows
+    of the clean edge list. Directed functions get duplicates in the same
+    orientation only, since a reversed edge or a self-loop is a new
+    directed edge."""
+    if name in _DIRECTED:
+        messy = _NULLS + _CLEAN + _CLEAN[2:5]
+    else:
+        messy = (
+            _NULLS + [(b, a) for a, b in _CLEAN] + _CLEAN + _CLEAN[:3]
+            + [(4, 4), (7, 7)]
+        )
+    assert _graph_rows(spark, name, messy) == _graph_rows(spark, name, _CLEAN)

@@ -21,7 +21,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from orientdb_etl_spark.functions.iterate import fixpoint
+from orientdb_etl_spark.functions.iterate import fixpoint, materialize
+
+
+_MAX_STATS = 64  # file sizes read per width estimate; more files are sampled
 
 
 def ensure_parallelism(
@@ -41,10 +44,13 @@ def ensure_parallelism(
     file sizes, packed the way Spark's own FilePartition logic packs
     splits), never from ``df.rdd.getNumPartitions()`` — under AQE,
     ``.rdd`` materializes every upstream shuffle stage, so the old probe
-    was an execution hazard for any non-scan call site. Frames with no
-    file-backed leaves (literal/in-memory test frames) are returned
-    unchanged: there is nothing to read in parallel, and the caller's
-    downstream shuffles restore width anyway.
+    was an execution hazard for any non-scan call site. The file count
+    alone does not decide: many small files pack into few splits. At
+    most ``_MAX_STATS`` file sizes are read; a longer file list is
+    sampled evenly and each sampled size stands for its share of the
+    list. Frames with no file-backed leaves (literal/in-memory test
+    frames) are returned unchanged: there is nothing to read in
+    parallel, and the caller's downstream shuffles restore width anyway.
 
     ``min_bytes_per_part`` is the per-call-site work gate (guide §2.4 —
     don't add an exchange a cheap stage can't amortize): when the spread
@@ -57,27 +63,33 @@ def ensure_parallelism(
     files = df.inputFiles()
     if not files:
         return df
-    if len(files) >= max(2, target // 2):
-        # many files: FilePartition packing aims at >= one split per
-        # core (bytesPerCore), so the scan is already wide — and this
-        # early exit also bounds the per-file stat loop below
-        return df
     jvm = spark._jvm  # noqa: SLF001
     hconf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
     jconf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
     max_split = int(jconf.filesMaxPartitionBytes())
     open_cost = int(jconf.filesOpenCostInBytes())
+    # the scan packs toward its own minimum partition count, not ours
+    min_num = jconf.filesMinPartitionNum()
+    scan_parts = (
+        int(min_num.get()) if min_num.isDefined()
+        else int(spark.conf.get(
+            "spark.sql.leafNodeDefaultParallelism",
+            str(spark.sparkContext.defaultParallelism),
+        ))
+    )
+    stride = -(-len(files) // _MAX_STATS)
+    sizes = []
+    for f in files[::stride]:
+        p = jvm.org.apache.hadoop.fs.Path(f)
+        sizes.append(int(p.getFileSystem(hconf).getFileStatus(p).getLen()))
+    sizes = [sz for sz in sizes for _ in range(stride)][: len(files)]
     # replicate FilePartition's split-size rule and greedy packing:
     # split = min(maxPartitionBytes, max(openCost, bytesPerCore)); each
     # file is cut into <= split chunks, chunks pack (size + openCost per
     # chunk) into partitions closed at the split budget
-    sizes = []
-    for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        sizes.append(int(p.getFileSystem(hconf).getFileStatus(p).getLen()))
     total = sum(sizes)
-    padded = total + len(files) * open_cost
-    split = min(max_split, max(open_cost, max(padded // max(target, 1), 1)))
+    padded = total + len(sizes) * open_cost
+    split = min(max_split, max(open_cost, padded // max(scan_parts, 1)))
     chunks: list[int] = []
     for sz in sizes:
         while sz > split:
@@ -338,7 +350,6 @@ def _cap_bucket_size(
         .agg(F.count(F.lit(1)).alias("_bsz"))
         .filter(F.col("_bsz") > max_bucket_size)
         .select(*keys)
-        .cache()  # tiny by definition
     )
     return banded.join(F.broadcast(over), keys, "left_anti")
 
@@ -389,40 +400,91 @@ def _bucket_pairs(
     return out.select(*cols)
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """One large-star round (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC 2014): every node u connects each LARGER
-    neighbor directly to the minimum of its neighborhood (incl. u) —
-    long chains collapse geometrically instead of one hop per round.
-    Output is directed child→parent with parent < child."""
-    sym = edges.union(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
-    mins = (
-        sym.groupBy("a")
-        .agg(F.min("b").alias("_mn"))
-        .select("a", F.least("a", "_mn").alias("_m"))
-    )
+def _by_node(edges: DataFrame) -> DataFrame:
+    """Group directed child→parent rows ``(c, p)`` with ``p <= c`` by
+    node: ``(n, parents, has_child)``. A row with ``p == c`` only says
+    that node ``c`` exists, so a vertex without edges (one whose only
+    pair is a self-loop) stays in the state as a parentless node."""
+    rows = edges.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("c").alias("n"), F.col("p").alias("p"),
+                    F.lit(False).alias("k"),
+                ),
+                F.struct(
+                    F.col("p").alias("n"), F.col("p").alias("p"),
+                    (F.col("p") != F.col("c")).alias("k"),
+                ),
+            )
+        ).alias("r")
+    ).select("r.*")
     return (
-        sym.join(mins, "a")
-        .filter(F.col("b") > F.col("a"))
+        rows.where(F.col("n").isNotNull())
+        .groupBy("n")
+        .agg(
+            F.collect_set(F.when(F.col("p") != F.col("n"), F.col("p"))).alias(
+                "parents"
+            ),
+            F.max("k").alias("has_child"),
+        )
+    )
+
+
+def _star_round(state: DataFrame, changed) -> DataFrame:
+    """One large-star + small-star round (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014) over the node-grouped
+    state, in three exchanges:
+
+    - large star, a window by ``a`` over the symmetrized edges: every
+      node u points each LARGER neighbor at ``m(u)``, the minimum of its
+      neighborhood including u, so long chains collapse geometrically;
+    - small star, a window by ``a`` after re-keying: every node u points
+      itself and all its parents at its minimum parent;
+    - :func:`_by_node` on the small-star edges.
+
+    The round's change count is the number of output nodes that break
+    the star-forest property: two or more parents, or both a parent and
+    a child. A round whose output is a set of stars is the last one."""
+    n, lone = F.col("n"), (F.size("parents") == 0) & ~F.col("has_child")
+    sym = state.select(
+        F.explode(
+            F.when(lone, F.array(F.struct(n.alias("a"), n.alias("b")))).otherwise(
+                F.flatten(
+                    F.transform(
+                        "parents",
+                        lambda p: F.array(
+                            F.struct(n.alias("a"), p.alias("b")),
+                            F.struct(p.alias("a"), n.alias("b")),
+                        ),
+                    )
+                )
+            )
+        ).alias("e")
+    ).select("e.a", "e.b")
+    # a lone node's only row is (n, n): it maps to itself in both stars
+    large = (
+        sym.withColumn(
+            "_m", F.least("a", F.min("b").over(Window.partitionBy("a")))
+        )
+        .where(F.col("b") >= F.col("a"))
         .select(F.col("b").alias("a"), F.col("_m").alias("b"))
-        .distinct()
     )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """One small-star round: every node u re-points ALL its parents (and
-    itself) at its minimum parent, flattening multi-parent nodes into
-    stars. Input/output directed child→parent, parent < child."""
-    mins = edges.groupBy("a").agg(F.min("b").alias("_mn"))
-    repointed = (
-        edges.join(mins, "a")
-        .filter(F.col("b") != F.col("_mn"))
-        .select(F.col("b").alias("a"), F.col("_mn").alias("b"))
+    small = large.withColumn("_m", F.min("b").over(Window.partitionBy("a")))
+    out = _by_node(
+        small.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("a").alias("c"), F.col("_m").alias("p")),
+                    F.struct(F.col("b").alias("c"), F.col("_m").alias("p")),
+                )
+            ).alias("e")
+        ).select("e.c", "e.p")
     )
-    own = mins.select("a", F.col("_mn").alias("b"))
-    return repointed.union(own).distinct()
+    return changed(
+        out,
+        (F.size("parents") > 1) | ((F.size("parents") == 1) & F.col("has_child")),
+    )
 
 
 def connected_component_labels(
@@ -437,8 +499,17 @@ def connected_component_labels(
     propagation whose round count is the component diameter (a
     pathological chain of near-dups — doc A ~ B ~ C ~ … — needs one round
     per hop there, but collapses geometrically here). Every round touches
-    only the PAIRS table (candidate collisions), never the corpus; the
-    loop is ``iterate.fixpoint``.
+    only the PAIRS table (candidate collisions), never the corpus.
+
+    The loop state is grouped by node, ``(n, parents, has_child)``, with
+    every parent smaller than its child. The pairs feed the first
+    grouping directly, in either orientation; duplicate pairs collapse
+    there, a self-loop makes its vertex a parentless node and a NULL
+    endpoint is no vertex. ``iterate.fixpoint`` runs :func:`_star_round`
+    and stops at the first round whose output is a star forest: each
+    star is one component, rooted at its minimum, so a vertex's label is
+    its parent, or itself when it has none. A graph that is already a
+    set of stars takes one round; no round only confirms the last.
 
     ``max_iter`` is a hard cap with a CONVERGENCE ASSERTION: 25 doubling
     rounds cover any graph that fits in storage (2^25 diameter), so
@@ -446,41 +517,19 @@ def connected_component_labels(
     than silently returning partially-merged clusters (which would
     under-dedup without a trace).
     """
-    # materialize the (possibly expensive) verified-pair subtree ONCE:
-    # it feeds the contracted edge set AND the trailing isolated-vertex
-    # union — without the cut point the full upstream candidate join
-    # re-executes for each consumer
-    base = pairs.select(
-        F.col("keep_id").alias("a"), F.col("dup_id").alias("b")
-    ).localCheckpoint(eager=True)
-    # star fixpoint: every edge points child→component-min, so a full
-    # round reproduces the (distinct) edge set exactly
-    edges = fixpoint(
-        base.filter(F.col("a") != F.col("b")).distinct(),
-        lambda e: _small_star(_large_star(e)),
-        max_iter,
-        "connected components (star contraction)",
+    state = _by_node(
+        pairs.select(
+            F.greatest("keep_id", "dup_id").alias("c"),
+            F.least("keep_id", "dup_id").alias("p"),
+        )
     )
-    roots = edges.select(F.col("b").alias("id")).distinct().withColumn(
-        "label", F.col("id")
+    stars = fixpoint(
+        state, _star_round, max_iter, "connected components (star contraction)"
     )
-    labeled = edges.select(
-        F.col("a").alias("id"), F.col("b").alias("label")
-    ).union(roots)
-    # vertices whose ONLY incident pair is a self-loop vanish from the
-    # contracted edge set (a != b filtered them) but are still part of
-    # the input universe — label them with themselves. Dedup pair streams
-    # never contain self-loops (keep_id < dup_id), but the general graph
-    # CC transformer exposes this function where they are legal input.
-    touched = (
-        base.select(F.col("a").alias("id"))
-        .union(base.select(F.col("b").alias("id")))
-        .distinct()
+    return stars.select(
+        F.col("n").alias("id"),
+        F.coalesce(F.array_min("parents"), F.col("n")).alias("label"),
     )
-    isolated = touched.join(
-        labeled.select("id").distinct(), "id", "left_anti"
-    ).withColumn("label", F.col("id"))
-    return labeled.union(isolated)
 
 
 def _drop_duplicates_by_pairs(
@@ -489,6 +538,7 @@ def _drop_duplicates_by_pairs(
     id_col: str,
     survivor: str,
     score_col: str | None = None,
+    scores: DataFrame | None = None,
 ) -> DataFrame:
     """Resolve verified duplicate pairs into survivors.
 
@@ -501,40 +551,53 @@ def _drop_duplicates_by_pairs(
     with the highest ``score_col`` (ties → min id) — the keep-the-best-
     quality policy of published corpus curation (RefinedWeb, FineWeb keep
     the longest/highest-quality member, not an arbitrary one). Only the
-    clustered subset (docs appearing in a verified pair) is ever scored
-    or windowed — the corpus itself sees one anti-join, as in the other
-    rules.
+    clustered ids (docs appearing in a verified pair) are scored or
+    windowed, and their scores are read from ``scores`` (an
+    ``(id_col, score_col)`` frame, ``df`` by default), so a caller that
+    already holds them cached need not recompute ``df`` for them.
+
+    Every rule materializes its drop set (ids only, at most one row per
+    clustered doc) with :func:`~orientdb_etl_spark.functions.iterate.materialize`
+    before returning ``df`` anti-joined with it, so the caller may
+    release its caches on return. The set is broadcast when its observed
+    row count fits the session's broadcast threshold; the result then
+    reads the corpus once, with no shuffle.
     """
     if survivor == "bucket_min":
-        dups = pairs.select("dup_id").distinct()
-        return df.join(dups.withColumnRenamed("dup_id", id_col), id_col, "left_anti")
-    if survivor == "connected_components":
-        labels = connected_component_labels(pairs)
-        drop = labels.filter(F.col("id") != F.col("label")).select(
-            F.col("id").alias(id_col)
+        drop = pairs.select(F.col("dup_id").alias(id_col)).distinct()
+    elif survivor == "connected_components":
+        drop = (
+            connected_component_labels(pairs)
+            .filter(F.col("id") != F.col("label"))
+            .select(F.col("id").alias(id_col))
         )
-        return df.join(drop, id_col, "left_anti")
-    if survivor == "best_of_component":
+    elif survivor == "best_of_component":
         if score_col is None:
             raise ValueError("survivor='best_of_component' needs score_col")
-        from pyspark.sql import Window
-
-        labels = connected_component_labels(pairs)
-        scored = labels.join(
-            df.select(F.col(id_col).alias("id"), F.col(score_col).alias("_score")),
+        scored = connected_component_labels(pairs).join(
+            (df if scores is None else scores).select(
+                F.col(id_col).alias("id"), F.col(score_col).alias("_score")
+            ),
             "id",
         )
         w = Window.partitionBy("label").orderBy(F.desc("_score"), F.asc("id"))
-        keep = (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("id")
+        drop = (
+            scored.withColumn("_keep", F.first("id").over(w))
+            .where(F.col("id") != F.col("_keep"))
+            .select(F.col("id").alias(id_col))
         )
-        drop = labels.select("id").join(keep, "id", "left_anti")
-        return df.join(
-            drop.withColumnRenamed("id", id_col), id_col, "left_anti"
-        )
-    raise ValueError(f"unknown survivor rule {survivor!r}")
+    else:
+        raise ValueError(f"unknown survivor rule {survivor!r}")
+    drop, n = materialize(drop)
+    # the checkpoint's size estimate is the pre-checkpoint plan's (a
+    # product over its joins), so size it from the observed row count
+    # at the planner's own per-row width
+    spark = df.sparkSession
+    jconf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+    width = 8 + drop._jdf.schema().apply(0).dataType().defaultSize()  # noqa: SLF001
+    if n * width <= jconf.autoBroadcastJoinThreshold():
+        drop = F.broadcast(drop)
+    return df.join(drop, id_col, "left_anti")
 
 
 def _minhash_banded(
@@ -544,18 +607,20 @@ def _minhash_banded(
     num_perm: int,
     bands: int,
     shingle_k: int,
+    carry: tuple[str, ...] = (),
 ) -> tuple[DataFrame, DataFrame]:
     """Shared signature + banding stage: (signatures, exploded
     (id, band, bucket) rows). Used by :func:`minhash_lsh_dedup` and the
     :func:`lsh_bucket_stats` observability helper so both see the exact
-    production banding. Caching the signatures is the CALLER's decision:
+    production banding. The signatures are ``(id, minhash)`` plus the
+    ``carry`` columns. Caching the signatures is the CALLER's decision:
     only :func:`minhash_lsh_dedup` reuses them (banding + verify join);
     a stats-only caller caching a corpus-sized frame would pin executor
     storage for the whole session."""
     rows_per_band = num_perm // bands
     sigs = minhash_signatures_fast(
         ensure_parallelism(df), text_col, num_perm, shingle_k
-    ).select(id_col, "minhash")
+    ).select(id_col, "minhash", *carry)
     band_arr = F.expr(
         f"transform(sequence(0, {bands - 1}), "
         f"b -> xxhash64(b, slice(minhash, b * {rows_per_band} + 1, {rows_per_band})))"
@@ -625,12 +690,23 @@ def minhash_lsh_dedup(
     ``survivor="connected_components"`` replaces the single-pass rule with
     transitive clustering over verified pairs (one keeper per component —
     the shape used by published corpus-dedup pipelines; see
-    :func:`connected_component_labels`).
+    :func:`connected_component_labels`); ``"best_of_component"`` keeps
+    the member with the highest ``score_col`` instead.
+
+    The corpus is read once for the survivor choice: the cached
+    signature frame ``(id, minhash[, score_col])`` feeds the banding, the
+    verify join and the scoring of clustered ids. The drop set is
+    materialized and the cache released before the return (see
+    :func:`_drop_duplicates_by_pairs`), so the returned frame reads the
+    corpus once more and pins no storage.
     """
-    sigs, banded = _minhash_banded(df, text_col, id_col, num_perm, bands, shingle_k)
-    # sigs feed BOTH the banding above and the verify join below — cache
-    # here (the reuse site), not inside _minhash_banded, so stats-only
-    # callers never pin a corpus-sized frame
+    carry = (score_col,) if survivor == "best_of_component" and score_col else ()
+    sigs, banded = _minhash_banded(
+        df, text_col, id_col, num_perm, bands, shingle_k, carry
+    )
+    # sigs feed the banding, the verify join and the survivor scores —
+    # cache here (the reuse site), not inside _minhash_banded, so
+    # stats-only callers never pin a corpus-sized frame
     sigs.cache()
     banded = _cap_bucket_size(banded, ["band", "bucket"], max_bucket_size)
     # ids only in the grouped shuffle (8 B/row); the 1 KB signatures are
@@ -646,9 +722,15 @@ def minhash_lsh_dedup(
         .withColumn("_est", _sig_agreement(F.col("_sig_l"), F.col("_sig_r")))
         .filter(F.col("_est") >= threshold)
         .select("keep_id", "dup_id")
-        .distinct()
     )
-    return _drop_duplicates_by_pairs(df, verified, id_col, survivor, score_col)
+    # cand is already distinct, and every survivor rule collapses
+    # repeated pairs itself, so verified needs no distinct of its own
+    try:
+        return _drop_duplicates_by_pairs(
+            df, verified, id_col, survivor, score_col, scores=sigs
+        )
+    finally:
+        sigs.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -744,7 +826,10 @@ def simhash_dedup(
         .select("keep_id", "dup_id")
         .distinct()
     )
-    return _drop_duplicates_by_pairs(df, verified, id_col, survivor, score_col)
+    try:
+        return _drop_duplicates_by_pairs(df, verified, id_col, survivor, score_col)
+    finally:
+        fp.unpersist()
 
 
 # --------------------------------------------------------------------------

@@ -22,7 +22,7 @@ functions of a kind treat duplicates, self-loops and NULL endpoints alike.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from orientdb_etl_spark.context import PipelineContext
@@ -378,29 +378,31 @@ def kcore(
     degree < k, recompute degrees, repeat to fixpoint. Returns
     ``(node, degree)`` with each survivor's degree INSIDE the core.
 
-    Each round is one hash-aggregate (degrees) + two semi-joins (keep
-    edges whose both endpoints survive) over the shrinking edge frame —
-    all shuffled on the vertex key, so at cluster scale the edge frame
-    keeps one partitioning across rounds. ``iterate.fixpoint`` exits
-    when a round removes nothing (further rounds are no-ops, which is
-    what lets a fixed-round unrolled oracle replay it, see
-    :func:`kcore_rounds_sql`); reaching ``max_iter`` raises, since a
-    partial peel is not a k-core.
+    Each round is two windows over the shrinking symmetrized edge frame:
+    one by ``src`` keeps the rows whose source has degree >= k, one by
+    the unordered endpoint pair keeps an edge iff both its orientations
+    stayed. The round counts the vertices of degree < k it drops, so
+    ``iterate.fixpoint`` exits on the first round that removes nothing
+    (further rounds are no-ops, which is what lets a fixed-round
+    unrolled oracle replay it, see :func:`kcore_rounds_sql`); reaching
+    ``max_iter`` raises, since a partial peel is not a k-core.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
 
-    def peel(cur: DataFrame) -> DataFrame:
-        keep = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-            .filter(F.col("_deg") >= k)
-            .select(F.col("src").alias("_v"))
+    def peel(cur: DataFrame, changed) -> DataFrame:
+        by_src = Window.partitionBy("src")
+        deg = cur.withColumn("_deg", F.count(F.lit(1)).over(by_src)).withColumn(
+            "_first", F.col("dst") == F.min("dst").over(by_src)
         )
+        kept = changed(deg, (F.col("_deg") < k) & F.col("_first")).where(
+            F.col("_deg") >= k
+        )
+        pair = Window.partitionBy(F.least("src", "dst"), F.greatest("src", "dst"))
         return (
-            cur.join(keep, cur["src"] == keep["_v"], "left_semi")
-            .join(keep.select(F.col("_v").alias("_w")),
-                  cur["dst"] == F.col("_w"), "left_semi")
+            kept.withColumn("_both", F.count(F.lit(1)).over(pair))
+            .where(F.col("_both") == 2)
+            .select("src", "dst")
         )
 
     cur = fixpoint(symmetrize(edges, src, dst), peel, max_iter, "k-core peeling")
@@ -569,8 +571,9 @@ def weighted_sssp(
     hop count can be cheaper — so every round re-relaxes: one
     dist⋈edges equi-join on the vertex key, a union with the standing
     distances, and a min per vertex. All three shuffle on the vertex
-    key (one partitioning reused across rounds). ``iterate.fixpoint``
-    exits early once a round improves nothing; reaching ``rounds``
+    key (one partitioning reused across rounds). A round counts the
+    vertices that are new or whose distance dropped, and
+    ``iterate.fixpoint`` exits early once that is 0; reaching ``rounds``
     returns the ``rounds``-edge answer, not an error.
     Fixed synchronous rounds + min-fold determinism make the result a
     pure function of (graph, rounds) — replayable by
@@ -583,11 +586,20 @@ def weighted_sssp(
         F.col(src).alias("_s"), F.col(dst).alias("_d"), F.col(weight).alias("_w")
     ).localCheckpoint()
 
-    def relax(dist: DataFrame) -> DataFrame:
+    def relax(dist: DataFrame, changed) -> DataFrame:
         step = dist.join(ed, dist["id"] == ed["_s"]).select(
-            F.col("_d").alias("id"), (F.col("dist") + F.col("_w")).alias("dist")
+            F.col("_d").alias("id"),
+            (F.col("dist") + F.col("_w")).alias("dist"),
+            F.lit(None).alias("_was"),
         )
-        return dist.unionByName(step).groupBy("id").agg(F.min("dist").alias("dist"))
+        best = (
+            dist.withColumn("_was", F.col("dist"))
+            .unionByName(step)
+            .groupBy("id")
+            .agg(F.min("dist").alias("dist"), F.min("_was").alias("_was"))
+        )
+        improved = F.col("_was").isNull() | (F.col("dist") < F.col("_was"))
+        return changed(best, improved).select("id", "dist")
 
     start = sources.select(F.col(id_col).alias("id")).distinct()
     return fixpoint(start.withColumn("dist", F.lit(0).cast("bigint")), relax, rounds)
@@ -696,7 +708,8 @@ def modularity(
     one fixed chain of double ops (squares cast to double before
     multiplying), so the oracle replays it bit-identically. Unlabeled
     vertices raise — a partition that misses graph nodes is a caller
-    bug, not a quantity to silently mis-normalize.
+    bug, not a quantity to silently mis-normalize. An empty graph counts
+    0 intra-community edges and has a NULL Q.
     """
     und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     lab = labels.select(
@@ -741,7 +754,7 @@ def modularity(
             F.col("_m").alias("m_edges"),
             F.col("_nn").alias("n_nodes"),
             F.col("_nc").alias("n_communities"),
-            F.col("_intra").alias("intra_edges"),
+            F.coalesce("_intra", F.lit(0)).alias("intra_edges"),
             F.round(q, round_to).alias("q_modularity"),
         )
     )
@@ -765,7 +778,8 @@ def clustering_coefficient(
     orientation, wedge fan-out bounded O(√m)). The
     final ratio is a fixed double chain over the three exact integers,
     so the oracle replays it bit-identically. A wedge-free graph
-    (all degrees <= 1) yields NULL, not a division blow-up.
+    (all degrees <= 1) yields NULL, not a division blow-up; the counts
+    of an empty graph are 0.
     """
     und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     deg = _degrees(und)
@@ -788,7 +802,7 @@ def clustering_coefficient(
         .select(
             F.col("_nv").alias("n_nodes"),
             F.col("_m").alias("n_edges"),
-            F.col("_w").alias("n_wedges"),
+            F.coalesce("_w", F.lit(0).cast("bigint")).alias("n_wedges"),
             "n_triangles",
             F.round(cc, round_to).alias("global_cc"),
         )
@@ -1018,14 +1032,15 @@ def _minlabel_fixpoint(
     """Min-label propagation along directed edges to a FIXED POINT:
     ``lab(u) = min(u, min over edges v->u of lab(v))`` iterated until no
     label changes (each round: one equi-join + one grouped min, run by
-    ``iterate.fixpoint``). Returns ``(id, lab)`` where ``lab`` is the
+    ``iterate.fixpoint``; a round counts the vertices whose label
+    dropped). Returns ``(id, lab)`` where ``lab`` is the
     minimum vertex id that can reach ``u``. Raises at ``max_rounds``,
     because :func:`scc`'s correctness NEEDS the fixed point."""
 
-    def round_(lab: DataFrame) -> DataFrame:
+    def round_(lab: DataFrame, changed) -> DataFrame:
         cand = (
             lab.join(edges, lab["id"] == edges["src"])
-            .select(F.col("dst").alias("id"), "lab")
+            .select(F.col("dst").alias("id"), "lab", F.lit(None).alias("_was"))
         )
         # label shortcut: lab(lab(u)) is also an ancestor of u (lab(u)
         # reaches u, and anything reaching lab(u) reaches u) — folding
@@ -1037,14 +1052,16 @@ def _minlabel_fixpoint(
                 F.col("id").alias("lab"), F.col("lab").alias("_ll")
             ),
             "lab",
-        ).select("id", F.col("_ll").alias("lab"))
-        return (
-            lab.select("id", "lab")
+        ).select("id", F.col("_ll").alias("lab"), F.lit(None).alias("_was"))
+        best = (
+            lab.select("id", "lab", F.col("lab").alias("_was"))
             .unionByName(cand)
             .unionByName(short)
             .groupBy("id")
-            .agg(F.min("lab").alias("lab"))
+            .agg(F.min("lab").alias("lab"), F.min("_was").alias("_was"))
         )
+        dropped = F.col("_was").isNull() | (F.col("lab") < F.col("_was"))
+        return changed(best, dropped).select("id", "lab")
 
     return fixpoint(
         verts.select("id", F.col("id").alias("lab")),
@@ -1298,7 +1315,8 @@ def louvain_move_pass(
     ONE summary row — ``(m2, n_moved, n_comm_before, n_comm_after,
     q_before, q_after, improved)`` — with the exact Newman modularity
     of both labelings, so the pass carries its own measured
-    effectiveness certificate. Synchronous (all-at-once) moves are what
+    effectiveness certificate (an empty graph has ``m2 = 0`` and NULL
+    modularities). Synchronous (all-at-once) moves are what
     a shuffle-parallel engine can do without serializing the node
     order; unlike the sequential original they don't GUARANTEE
     monotone Q, so the certificate reports the measured delta instead
@@ -1429,7 +1447,7 @@ def louvain_move_pass(
         b.crossJoin(F.broadcast(a))
         .crossJoin(F.broadcast(n_moved))
         .select(
-            F.col("_m2").alias("m2"),
+            F.coalesce("_m2", F.lit(0).cast("long")).alias("m2"),
             F.coalesce(F.col("_nm"), F.lit(0).cast("long")).alias("n_moved"),
             "n_comm_before",
             "n_comm_after",

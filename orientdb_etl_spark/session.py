@@ -4,7 +4,9 @@ Local testing runs ``local[N]`` (single JVM); production targets a real
 cluster — every default below is chosen to survive that transition:
 AQE on (runtime coalesce + skew-join handling), shuffle partitions sized
 explicitly instead of the 200 default, UTC session timezone so results are
-oracle-comparable, Arrow enabled for the Pandas-UDF slow path.
+oracle-comparable, Arrow enabled for the Pandas-UDF slow path, and a
+generated-class cache large enough that a repeated pipeline reuses its
+compiled code instead of recompiling it on every run.
 """
 
 from __future__ import annotations
@@ -40,6 +42,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # a curation pipeline (text metrics, then minhash dedup) generates
+        # more classes than the default 100 entries hold, so each rerun
+        # recompiled them and reruns never reached a steady time; a static
+        # conf, so it is set before the session starts
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

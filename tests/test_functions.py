@@ -182,6 +182,128 @@ def test_connected_components_cap_raises_instead_of_partial(spark):
     assert connected_component_labels(empty).count() == 0
 
 
+def _union_find_labels(pairs):
+    """Driver-side ground truth: component min per vertex. A NULL
+    endpoint is no vertex; its partner still is one."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        roots = [find(v) for v in (a, b) if v is not None]
+        if len(roots) == 2 and roots[0] != roots[1]:
+            parent[max(roots)] = min(roots)
+    return {v: find(v) for v in list(parent)}
+
+
+_CC_CASES = {
+    "both_orientations": [(1, 2), (3, 2), (4, 3), (5, 4), (9, 8), (8, 7)],
+    "duplicate_pairs": [(1, 2), (1, 2), (2, 1), (2, 3), (3, 2), (3, 2)],
+    "self_loops": [(1, 1), (2, 2), (2, 3), (4, 4), (4, 5), (6, 6)],
+    "null_endpoint": [(1, None), (None, None), (2, 3)],
+    "empty": [],
+    "single_edge": [(7, 3)],
+    "star": [(0, i) for i in range(1, 25)] + [(i, 100) for i in range(101, 120)],
+    "long_chain": [(i + 1, i) if i % 2 else (i, i + 1) for i in range(150)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+def test_connected_component_labels_match_union_find(spark, case):
+    """Star contraction over node-grouped state labels every vertex with
+    its component minimum, whatever the pair orientation, duplication or
+    self-loops: the same labels as a driver-side union-find."""
+    from orientdb_etl_spark.functions.dedup import connected_component_labels
+
+    pairs = _CC_CASES[case]
+    df = spark.createDataFrame(pairs, "keep_id long, dup_id long")
+    rows = connected_component_labels(df).collect()
+    assert len(rows) == len({r.id for r in rows})
+    assert {r.id: r.label for r in rows} == _union_find_labels(pairs)
+
+
+def test_connected_components_star_needs_no_confirming_round(spark):
+    """Pairs that already form stars (every duplicate pointing at its
+    cluster minimum, as bucket keepers do) and disjoint triangles end in
+    the first round: its output is a star forest, so no second round
+    runs to confirm it, and a one-round cap does not raise."""
+    from orientdb_etl_spark.functions.dedup import connected_component_labels
+
+    for pairs in (
+        _CC_CASES["star"],
+        [(3 * t + a, 3 * t + b) for t in range(20) for a, b in ((0, 1), (0, 2), (1, 2))],
+    ):
+        df = spark.createDataFrame(pairs, "keep_id long, dup_id long")
+        got = {r.id: r.label for r in connected_component_labels(df, max_iter=1).collect()}
+        assert got == _union_find_labels(pairs)
+
+
+def test_connected_components_job_bound_on_disjoint_triangles(spark):
+    """20 disjoint triangles converge in one round: one job per exchange
+    (the grouping of the pairs and the round's three), the round's
+    checkpoint and the collect, with no separate convergence job (the
+    two-round loop it replaces ran 31). Job counts under adaptive
+    execution move by a job or two between runs of the same call, so the
+    bound holds for the least of three runs."""
+    from orientdb_etl_spark.functions.dedup import connected_component_labels
+
+    pairs = [
+        (3 * t + a, 3 * t + b) for t in range(20) for a, b in ((0, 1), (0, 2), (1, 2))
+    ]
+    df = spark.createDataFrame(pairs, "keep_id long, dup_id long")
+    sc = spark.sparkContext
+    counts = []
+    try:
+        for i in range(3):
+            sc.setJobGroup(f"cc_job_bound_{i}", "count the jobs of one CC call")
+            connected_component_labels(df).collect()
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(f"cc_job_bound_{i}")))
+    finally:
+        sc.setJobGroup("default", "")
+    assert min(counts) <= 6, counts
+
+
+def test_best_of_component_matches_python_replay(spark):
+    """The best_of_component drop set equals a Python replay: per
+    component keep the highest score, ties to the smaller id, drop the
+    rest; unclustered docs always stay. Scores may come from a separate
+    frame (the cached signatures in minhash_lsh_dedup)."""
+    import random
+
+    from orientdb_etl_spark.functions.dedup import _drop_duplicates_by_pairs
+
+    rng = random.Random(5)
+    ids = list(range(60))
+    score = {i: rng.choice([0.1, 0.5, 0.5, 0.9]) for i in ids}  # many ties
+    pairs = {
+        (min(a, b), max(a, b))
+        for a, b in ((rng.choice(ids), rng.choice(ids)) for _ in range(45))
+        if a != b
+    }
+    labels = _union_find_labels(pairs)
+    comps = {}
+    for v, lab in labels.items():
+        comps.setdefault(lab, []).append(v)
+    keep = {min(m, key=lambda v: (-score[v], v)) for m in comps.values()}
+    want = sorted(i for i in ids if i not in labels or i in keep)
+
+    docs = spark.createDataFrame([(i, f"t{i}") for i in ids], "doc_id long, text string")
+    scores = spark.createDataFrame(
+        [(i, score[i]) for i in ids], "doc_id long, score double"
+    )
+    pdf = spark.createDataFrame(sorted(pairs), "keep_id long, dup_id long")
+    got = _drop_duplicates_by_pairs(
+        docs, pdf, "doc_id", "best_of_component", "score", scores=scores
+    )
+    assert sorted(r.doc_id for r in got.collect()) == want
+    assert got.columns == ["doc_id", "text"]
+
+
 def test_minhash_cc_survivor_rule(spark):
     from orientdb_etl_spark.functions.dedup import minhash_lsh_dedup
 
@@ -220,6 +342,26 @@ def test_best_of_component_requires_score(spark):
         minhash_lsh_dedup(
             _docs(spark), "text", "doc_id", survivor="best_of_component"
         ).collect()
+
+
+def test_rerun_dedup_chain_compiles_no_new_classes(spark):
+    """Text metrics -> minhash dedup with best_of_component generates more
+    classes than Spark's default 100-entry codegen cache holds, so every
+    rerun in a long-lived session used to recompile them. The session's
+    cache must hold them: the second run compiles nothing."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run():
+        minhash_lsh_dedup(
+            add_text_metrics(_docs(spark)), "text", "doc_id", num_perm=64,
+            bands=16, threshold=0.5, survivor="best_of_component",
+            score_col="quality",
+        ).collect()
+
+    run()
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    run()
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == before
 
 
 def test_bucket_size_guard_keeps_normal_survivors_identical(spark):
@@ -2286,6 +2428,9 @@ _NO_LEAK_CALLS = [
     "kmeans_quantized",
     "power_iteration_distributed",
     "incremental_near_dedup",
+    "minhash_lsh_dedup-bucket_min",
+    "minhash_lsh_dedup-connected_components",
+    "minhash_lsh_dedup-best_of_component",
 ]
 
 
@@ -2368,6 +2513,16 @@ def test_no_cached_frame_survives_the_call(spark, call):
             docs.where("doc_id > 2"), docs.where("doc_id <= 2"), "text",
             "doc_id", num_perm=16, bands=4, shingle_k=3,
         ),
+        **{
+            f"minhash_lsh_dedup-{rule}": (
+                lambda rule=rule: minhash_lsh_dedup(
+                    docs.withColumn("q", F.length("text")), "text", "doc_id",
+                    num_perm=16, bands=8, shingle_k=3, threshold=0.2,
+                    survivor=rule, score_col="q",
+                )
+            )
+            for rule in ("bucket_min", "connected_components", "best_of_component")
+        },
     }[call]
     jjsc = spark.sparkContext._jsc
     before = {int(k) for k in jjsc.getPersistentRDDs().keySet().toArray()}
@@ -2759,3 +2914,33 @@ def test_ensure_parallelism_scan_width_probe(spark, tmp_path):
     # literal frames have no file-backed leaves -> unchanged
     local = spark.createDataFrame([(1, "a")], "id int, t string")
     assert ensure_parallelism(local) is local
+
+
+def test_ensure_parallelism_spreads_many_small_files(spark, tmp_path):
+    """The file count alone does not make a scan wide: 16 tiny files
+    that the scan packs into one split are spread at target 8, and the
+    packing estimate agrees with the scan. The session's minimum scan
+    partition count is set to 1 so that the packing, not this machine's
+    core count, decides the scan width."""
+    from orientdb_etl_spark.functions.dedup import ensure_parallelism
+
+    path = str(tmp_path / "many.parquet")
+    spark.range(160).selectExpr("id", "repeat('x', 20) AS t").repartition(
+        16
+    ).write.parquet(path)
+    key = "spark.sql.files.minPartitionNum"
+    spark.conf.set(key, "1")
+    try:
+        df = spark.read.parquet(path)
+        assert len(df.inputFiles()) == 16
+        assert df.rdd.getNumPartitions() == 1
+        spread = ensure_parallelism(df, min_parts=8)
+        assert spread is not df
+        assert spread.rdd.getNumPartitions() == 8
+        assert spread.count() == 160
+        # the same files scanned wide enough are left alone
+        spark.conf.set(key, "8")
+        wide = spark.read.parquet(path)
+        assert ensure_parallelism(wide, min_parts=8) is wide
+    finally:
+        spark.conf.unset(key)

@@ -279,6 +279,36 @@ def test_kcore_k1_drops_only_isolated_selfloops(spark):
     assert {r.node for r in out.collect()} == {1, 2}
 
 
+@pytest.mark.parametrize("case", ["empty", "single_vertex", "cap"])
+def test_fixpoint_loops_on_degenerate_graphs(spark, case):
+    """The three graph loops on ``iterate.fixpoint`` read their stop
+    signal from the round's own job. An empty graph (whose observed
+    frame the adaptive planner prunes) and a lone self-loop vertex stop
+    after one round with the trivial answer; at the cap, kcore and scc's
+    min-label loop raise while weighted_sssp returns its bounded answer."""
+    from orientdb_etl_spark.functions.graph import kcore, scc, weighted_sssp
+
+    if case == "cap":
+        path = _edges(spark, [(i, i + 1) for i in range(12)])
+        with pytest.raises(RuntimeError, match="did not converge"):
+            kcore(path, 2, max_iter=2)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            scc(path, max_rounds=1)
+        chain = _wedges(spark, [(i, i + 1, 1) for i in range(12)])
+        got = weighted_sssp(chain, _seeds(spark, [0]), rounds=3).collect()
+        assert sorted(map(tuple, got)) == [(0, 0), (1, 1), (2, 2), (3, 3)]
+        return
+    pairs = [] if case == "empty" else [(1, 1)]
+    assert kcore(_edges(spark, pairs), 1).collect() == []
+    assert sorted(map(tuple, scc(_edges(spark, pairs)).collect())) == (
+        [] if case == "empty" else [(1, 1)]
+    )
+    sssp = weighted_sssp(
+        _wedges(spark, [(a, b, 1) for a, b in pairs]), _seeds(spark, [1]), rounds=5
+    )
+    assert sorted(map(tuple, sssp.collect())) == [(1, 0)]
+
+
 def test_kcore_matches_unrolled_sql(spark):
     from orientdb_etl_spark.functions.graph import kcore, kcore_rounds_sql, symmetrize
 
@@ -885,10 +915,10 @@ def _graph_rows(spark, name, pairs):
 # empty on both; the directed one keeps vertex 1 with its self-loop
 _EMPTY_GRAPH_ROWS = {
     "triangle_count": [(0,)],
-    "clustering_coefficient": [(0, 0, None, 0, None)],
+    "clustering_coefficient": [(0, 0, 0, 0, None)],
     "assortativity": [(0, 0, None)],
-    "modularity": [(0, 0, 0, None, None)],
-    "louvain_move_pass": [(None, 0, 0, 0, None, None, None)],
+    "modularity": [(0, 0, 0, 0, None)],
+    "louvain_move_pass": [(0, 0, 0, 0, None, None, None)],
 }
 _LOOP_GRAPH_ROWS = {"pagerank": [(1, 1.0)], "hits": [(1, 1.0, 1.0)], "scc": [(1, 1)]}
 

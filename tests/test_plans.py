@@ -142,18 +142,27 @@ def test_jdbc_extract_partitioned_scan(spark):
 def test_minhash_bucket_guard_broadcasts_overfull_list(spark):
     """The degenerate-bucket guard must be a broadcast anti-join against
     the (tiny) over-full bucket list, not an extra shuffle of the banded
-    rows."""
-    from orientdb_etl_spark.functions.dedup import minhash_lsh_dedup
+    rows. The dedup result itself is the corpus anti-joined with the
+    broadcast drop set, materialized before the call returns."""
+    from orientdb_etl_spark.functions.dedup import (
+        _cap_bucket_size,
+        _minhash_banded,
+        minhash_lsh_dedup,
+    )
 
     docs = spark.createDataFrame(
         [(i, f"some text number {i} with shared tokens") for i in range(10)],
         "doc_id long, text string",
     )
-    out = minhash_lsh_dedup(docs, "text", "doc_id", num_perm=64, bands=16)
-    plan = out._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    _, banded = _minhash_banded(docs, "text", "doc_id", 64, 16, 5)
+    guarded = _cap_bucket_size(banded, ["band", "bucket"], 1000)
+    plan = guarded._jdf.queryExecution().explainString(mode)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    out = minhash_lsh_dedup(docs, "text", "doc_id", num_perm=64, bands=16)
+    plan = out._jdf.queryExecution().explainString(mode)
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert plan.count("Exchange") == plan.count("BroadcastExchange")
 
 
 def test_q4_semi_join_no_post_dedup(spark):

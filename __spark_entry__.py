@@ -4590,12 +4590,11 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from orientdb_etl_spark.functions.text import tokens_col
 
-    # stage the tokenization once per row; quality+lang otherwise
-    # re-split per referencing term (no CSE across column trees)
+    # stage the tokenization once per row; quality's token count reads it
     return docs.withColumn("_tk", tokens_col("text")).select(
         "doc_id",
         F.round(quality_score("text", tokens=F.col("_tk")), 4).alias("quality"),
-        language_id("text", tokens=F.col("_tk")).alias("lang_pred"),
+        language_id("text").alias("lang_pred"),
         F.round(repetition_ratio("_rep"), 4).alias("rep_ratio"),
         pii_scrub("_pii").alias("scrubbed"),
     )

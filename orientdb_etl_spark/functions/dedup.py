@@ -113,16 +113,18 @@ def ensure_parallelism(
     return df.repartition(target)
 
 
-@F.pandas_udf(T.DoubleType())
-def _sig_agreement(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Fraction of equal MinHash components per candidate pair (the
-    Jaccard estimate), Arrow-batched — interpreted zip_with on 64-wide
-    arrays was the verify stage's bottleneck."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    ma = np.vstack(a.to_numpy())
-    mb = np.vstack(b.to_numpy())
-    return pd.Series((ma == mb).mean(axis=1))
+def _agreement_sql(left: str, right: str) -> str:
+    """Fraction of equal MinHash components of two signature columns (the
+    Jaccard estimate) as a JVM expression, evaluated where the candidate
+    pairs are joined to their signatures. A pandas UDF here was slower at
+    every measured size: each of its tasks pays a fixed Python-worker
+    set-up (see SCALE.md, "Python stages") that is larger than the whole
+    comparison in the JVM. NULL signatures never reach it: they band
+    nowhere (:func:`_minhash_banded`)."""
+    return (
+        f"aggregate(zip_with({left}, {right}, (x, y) -> IF(x = y, 1, 0)), 0, "
+        f"(s, v) -> s + v) / size({left})"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -345,11 +347,11 @@ def _cap_bucket_size(
     # pass map-side-combines to ~one row per bucket and never materializes
     # a degenerate bucket's members anywhere (unlike folding the cap into
     # the collect_list grouping, which would build the giant array first)
+    # the anti-join reads only the keys of `over`; its count is pruned
     over = (
         banded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_bsz"))
-        .filter(F.col("_bsz") > max_bucket_size)
-        .select(*keys)
+        .agg(F.expr("count(1) AS _bsz"))
+        .where(f"_bsz > {int(max_bucket_size)}")
     )
     return banded.join(F.broadcast(over), keys, "left_anti")
 
@@ -375,29 +377,20 @@ def _bucket_pairs(
     without joining signatures back.
     """
     if payload_col is None:
-        collected = F.sort_array(F.collect_list(F.col(id_col)))
+        collected = f"sort_array(collect_list({id_col}))"
         emit = "y -> struct(x AS keep_id, y AS dup_id)"
     else:
-        collected = F.sort_array(
-            F.collect_list(
-                F.struct(F.col(id_col).alias("i"), F.col(payload_col).alias("p"))
-            )
-        )
+        collected = f"sort_array(collect_list(struct({id_col} AS i, {payload_col} AS p)))"
         emit = "y -> struct(x.i AS keep_id, y.i AS dup_id, x.p AS _pl, y.p AS _pr)"
     groups = (
         banded.groupBy(*keys)
-        .agg(collected.alias("_ids"))
-        .filter(F.size("_ids") >= 2)
+        .agg(F.expr(f"{collected} AS _ids"))
+        .where("size(_ids) >= 2")
     )
-    pair_expr = (
-        "flatten(transform(_ids, (x, i) -> "
-        f"transform(slice(_ids, i + 2, size(_ids) - i - 1), {emit})))"
+    return groups.selectExpr(
+        "inline(flatten(transform(_ids, (x, i) -> "
+        f"transform(slice(_ids, i + 2, size(_ids) - i - 1), {emit}))))"
     )
-    out = groups.select(F.explode(F.expr(pair_expr)).alias("_p"))
-    cols = ["_p.keep_id", "_p.dup_id"]
-    if payload_col is not None:
-        cols += ["_p._pl", "_p._pr"]
-    return out.select(*cols)
 
 
 def _by_node(edges: DataFrame) -> DataFrame:
@@ -405,28 +398,16 @@ def _by_node(edges: DataFrame) -> DataFrame:
     node: ``(n, parents, has_child)``. A row with ``p == c`` only says
     that node ``c`` exists, so a vertex without edges (one whose only
     pair is a self-loop) stays in the state as a parentless node."""
-    rows = edges.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("c").alias("n"), F.col("p").alias("p"),
-                    F.lit(False).alias("k"),
-                ),
-                F.struct(
-                    F.col("p").alias("n"), F.col("p").alias("p"),
-                    (F.col("p") != F.col("c")).alias("k"),
-                ),
-            )
-        ).alias("r")
-    ).select("r.*")
     return (
-        rows.where(F.col("n").isNotNull())
+        edges.selectExpr(
+            "inline(array(named_struct('n', c, 'p', p, 'k', false), "
+            "named_struct('n', p, 'p', p, 'k', p != c)))"
+        )
+        .where("n IS NOT NULL")
         .groupBy("n")
         .agg(
-            F.collect_set(F.when(F.col("p") != F.col("n"), F.col("p"))).alias(
-                "parents"
-            ),
-            F.max("k").alias("has_child"),
+            F.expr("collect_set(CASE WHEN p != n THEN p END) AS parents"),
+            F.expr("max(k) AS has_child"),
         )
     )
 
@@ -446,44 +427,25 @@ def _star_round(state: DataFrame, changed) -> DataFrame:
     The round's change count is the number of output nodes that break
     the star-forest property: two or more parents, or both a parent and
     a child. A round whose output is a set of stars is the last one."""
-    n, lone = F.col("n"), (F.size("parents") == 0) & ~F.col("has_child")
-    sym = state.select(
-        F.explode(
-            F.when(lone, F.array(F.struct(n.alias("a"), n.alias("b")))).otherwise(
-                F.flatten(
-                    F.transform(
-                        "parents",
-                        lambda p: F.array(
-                            F.struct(n.alias("a"), p.alias("b")),
-                            F.struct(p.alias("a"), n.alias("b")),
-                        ),
-                    )
-                )
-            )
-        ).alias("e")
-    ).select("e.a", "e.b")
     # a lone node's only row is (n, n): it maps to itself in both stars
     large = (
-        sym.withColumn(
-            "_m", F.least("a", F.min("b").over(Window.partitionBy("a")))
+        state.selectExpr(
+            "inline(CASE WHEN size(parents) = 0 AND NOT has_child "
+            "THEN array(named_struct('a', n, 'b', n)) "
+            "ELSE flatten(transform(parents, p -> array("
+            "named_struct('a', n, 'b', p), named_struct('a', p, 'b', n)))) END)"
         )
-        .where(F.col("b") >= F.col("a"))
-        .select(F.col("b").alias("a"), F.col("_m").alias("b"))
+        .selectExpr("a", "b", "least(a, min(b) OVER (PARTITION BY a)) AS _m")
+        .where("b >= a")
+        .selectExpr("b AS a", "_m AS b")
     )
-    small = large.withColumn("_m", F.min("b").over(Window.partitionBy("a")))
     out = _by_node(
-        small.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("c"), F.col("_m").alias("p")),
-                    F.struct(F.col("b").alias("c"), F.col("_m").alias("p")),
-                )
-            ).alias("e")
-        ).select("e.c", "e.p")
+        large.selectExpr("a", "b", "min(b) OVER (PARTITION BY a) AS _m").selectExpr(
+            "inline(array(named_struct('c', a, 'p', _m), named_struct('c', b, 'p', _m)))"
+        )
     )
     return changed(
-        out,
-        (F.size("parents") > 1) | ((F.size("parents") == 1) & F.col("has_child")),
+        out, F.expr("size(parents) > 1 OR (size(parents) = 1 AND has_child)")
     )
 
 
@@ -518,18 +480,14 @@ def connected_component_labels(
     under-dedup without a trace).
     """
     state = _by_node(
-        pairs.select(
-            F.greatest("keep_id", "dup_id").alias("c"),
-            F.least("keep_id", "dup_id").alias("p"),
+        pairs.selectExpr(
+            "greatest(keep_id, dup_id) AS c", "least(keep_id, dup_id) AS p"
         )
     )
     stars = fixpoint(
         state, _star_round, max_iter, "connected components (star contraction)"
     )
-    return stars.select(
-        F.col("n").alias("id"),
-        F.coalesce(F.array_min("parents"), F.col("n")).alias("label"),
-    )
+    return stars.selectExpr("n AS id", "coalesce(array_min(parents), n) AS label")
 
 
 def _drop_duplicates_by_pairs(
@@ -564,27 +522,29 @@ def _drop_duplicates_by_pairs(
     reads the corpus once, with no shuffle.
     """
     if survivor == "bucket_min":
-        drop = pairs.select(F.col("dup_id").alias(id_col)).distinct()
+        drop = pairs.selectExpr(f"dup_id AS {id_col}").distinct()
     elif survivor == "connected_components":
         drop = (
             connected_component_labels(pairs)
-            .filter(F.col("id") != F.col("label"))
-            .select(F.col("id").alias(id_col))
+            .where("id != label")
+            .selectExpr(f"id AS {id_col}")
         )
     elif survivor == "best_of_component":
         if score_col is None:
             raise ValueError("survivor='best_of_component' needs score_col")
         scored = connected_component_labels(pairs).join(
-            (df if scores is None else scores).select(
-                F.col(id_col).alias("id"), F.col(score_col).alias("_score")
+            (df if scores is None else scores).selectExpr(
+                f"{id_col} AS id", f"{score_col} AS _score"
             ),
             "id",
         )
-        w = Window.partitionBy("label").orderBy(F.desc("_score"), F.asc("id"))
         drop = (
-            scored.withColumn("_keep", F.first("id").over(w))
-            .where(F.col("id") != F.col("_keep"))
-            .select(F.col("id").alias(id_col))
+            scored.selectExpr(
+                "id",
+                "first(id) OVER (PARTITION BY label ORDER BY _score DESC, id ASC) AS _keep",
+            )
+            .where("id != _keep")
+            .selectExpr(f"id AS {id_col}")
         )
     else:
         raise ValueError(f"unknown survivor rule {survivor!r}")
@@ -620,13 +580,13 @@ def _minhash_banded(
     rows_per_band = num_perm // bands
     sigs = minhash_signatures_fast(
         ensure_parallelism(df), text_col, num_perm, shingle_k
-    ).select(id_col, "minhash", *carry)
-    band_arr = F.expr(
-        f"transform(sequence(0, {bands - 1}), "
-        f"b -> xxhash64(b, slice(minhash, b * {rows_per_band} + 1, {rows_per_band})))"
-    )
-    banded = sigs.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band", "bucket")
+    ).selectExpr(id_col, "minhash", *carry)
+    # a NULL signature (NULL text) bands nowhere: xxhash64(b, NULL) hashes
+    # b alone, which would put every NULL-text doc in one bucket per band
+    banded = sigs.where("minhash IS NOT NULL").selectExpr(
+        id_col,
+        f"posexplode(transform(sequence(0, {bands - 1}), b -> xxhash64(b, "
+        f"slice(minhash, b * {rows_per_band} + 1, {rows_per_band})))) AS (band, bucket)",
     )
     return sigs, banded
 
@@ -714,14 +674,13 @@ def minhash_lsh_dedup(
     # of being carried through every one of the `bands` bucket copies
     cand = _bucket_pairs(banded, ["band", "bucket"], id_col).distinct()
     # verify candidates on the full signature (estimate of Jaccard)
-    sl = sigs.select(F.col(id_col).alias("keep_id"), F.col("minhash").alias("_sig_l"))
-    sr = sigs.select(F.col(id_col).alias("dup_id"), F.col("minhash").alias("_sig_r"))
+    sl = sigs.selectExpr(f"{id_col} AS keep_id", "minhash AS _sig_l")
+    sr = sigs.selectExpr(f"{id_col} AS dup_id", "minhash AS _sig_r")
     verified = (
         cand.join(sl, "keep_id")
         .join(sr, "dup_id")
-        .withColumn("_est", _sig_agreement(F.col("_sig_l"), F.col("_sig_r")))
-        .filter(F.col("_est") >= threshold)
-        .select("keep_id", "dup_id")
+        .where(f"{_agreement_sql('_sig_l', '_sig_r')} >= {float(threshold)!r}D")
+        .selectExpr("keep_id", "dup_id")
     )
     # cand is already distinct, and every survivor rule collapses
     # repeated pairs itself, so verified needs no distinct of its own
@@ -1234,8 +1193,8 @@ def incremental_near_dedup(
     if mode not in ("filter", "flag"):
         raise ValueError(f"unknown mode {mode!r}")
     stc = seen_text_col or text_col
-    seen_keyed = seen_df.select(
-        F.xxhash64(F.col(stc)).alias("_seen_key"), F.col(stc).alias("_stext")
+    seen_keyed = seen_df.selectExpr(
+        f"xxhash64({stc}) AS _seen_key", f"{stc} AS _stext"
     ).dropDuplicates(["_seen_key"])
     sigs_new, banded_new = _minhash_banded(
         new_df, text_col, id_col, num_perm, bands, shingle_k
@@ -1257,29 +1216,26 @@ def incremental_near_dedup(
     over = None
     if max_bucket_size is not None:
         sizes = (
-            bn.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("_c"))
-            .unionByName(
-                bs.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("_c"))
-            )
+            bn.groupBy("band", "bucket").agg(F.expr("count(1) AS _c"))
+            .unionByName(bs.groupBy("band", "bucket").agg(F.expr("count(1) AS _c")))
             .groupBy("band", "bucket")
-            .agg(F.sum("_c").alias("_bsz"))
+            .agg(F.expr("sum(_c) AS _bsz"))
         )
         over = (
-            sizes.filter(F.col("_bsz") > max_bucket_size)
-            .select("band", "bucket")
+            sizes.where(f"_bsz > {int(max_bucket_size)}")
+            .selectExpr("band", "bucket")
             .cache()  # tiny by definition
         )
         bn = bn.join(F.broadcast(over), ["band", "bucket"], "left_anti")
         bs = bs.join(F.broadcast(over), ["band", "bucket"], "left_anti")
-    cand = bn.join(bs, ["band", "bucket"]).select(id_col, "_seen_key").distinct()
-    sn = sigs_new.select(F.col(id_col), F.col("minhash").alias("_sig_n"))
-    ss = sigs_seen.select(F.col("_seen_key"), F.col("minhash").alias("_sig_s"))
+    cand = bn.join(bs, ["band", "bucket"]).selectExpr(id_col, "_seen_key").distinct()
+    sn = sigs_new.selectExpr(id_col, "minhash AS _sig_n")
+    ss = sigs_seen.selectExpr("_seen_key", "minhash AS _sig_s")
     hits = (
         cand.join(sn, id_col)
         .join(ss, "_seen_key")
-        .withColumn("_est", _sig_agreement(F.col("_sig_n"), F.col("_sig_s")))
-        .filter(F.col("_est") >= threshold)
-        .select(id_col)
+        .where(f"{_agreement_sql('_sig_n', '_sig_s')} >= {float(threshold)!r}D")
+        .selectExpr(id_col)
         .distinct()
         # materialize the (small) hit set NOW so the signature caches can
         # be released immediately — this runs once per snapshot in a

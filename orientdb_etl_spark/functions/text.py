@@ -2,6 +2,14 @@
 
 All pure JVM expressions (split / regexp / aggregate) — these run inside
 whole-stage codegen over the documents table; no Python in the hot path.
+
+The per-document metrics (token count, quality score, language ID,
+content fingerprint) are lambda-free SQL text, each formula written once
+as a function of the SQL text of its inputs: the public column functions
+return ``F.expr`` of it, and :func:`add_text_metrics` composes the same
+text into one staged projection pair. Building them costs a few py4j
+round trips instead of one per column node, and no higher-order lambda
+is evaluated interpreted per token.
 """
 
 from __future__ import annotations
@@ -22,28 +30,86 @@ _STOPWORDS = {
     "es": ["el", "la", "los", "de", "que", "y", "en", "un", "por", "con"],
 }
 
+_WS_RE = r"\s+"
+_PUNCT_RE = r"[^!-/:-@\[-`{-~]"
+_NON_WORD_RE = r"[^a-z0-9\s]"
+# a whole whitespace token of ASCII letters: the run starts the text or
+# follows a whitespace character and ends the text or precedes one
+_ALPHA_TOKEN_RE = r"(?:^|\s)[A-Za-z]+(?=\s|\z)"
+
+
+def _lit(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql(col: str | Column) -> str:
+    """SQL text of a column argument: a name as is, a Column as printed."""
+    return col if isinstance(col, str) else col._jc.toString()  # noqa: SLF001
+
+
+def _quoted(name: str) -> str:
+    """A top-level column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _trimmed_sql(text: str) -> str:
+    return f"trim(coalesce({text}, ''))"
+
+
+def _token_count_sql(trimmed: str) -> str:
+    # split('') is [''], one element for no token
+    return f"(size(split({trimmed}, {_lit(_WS_RE)})) - cast({trimmed} = '' AS int))"
+
+
+def _quality_sql(text: str, trimmed: str, n_toks: str) -> str:
+    n_alpha = f"size(regexp_extract_all({trimmed}, {_lit(_ALPHA_TOKEN_RE)}, 0))"
+    # a whole guarded CASE, never a bare division: under ANSI arithmetic a
+    # division repeated in one projection may be evaluated ahead of its guard
+    mean_wl = f"CASE WHEN {n_toks} > 0 THEN length({text}) / {n_toks} ELSE 0.0D END"
+    return (
+        f"(least(length({text}) / 500.0D, 1.0D)"
+        f" + (1 - CASE WHEN length({text}) > 0 THEN length(regexp_replace("
+        f"{text}, {_lit(_PUNCT_RE)}, '')) / length({text}) ELSE 0.0D END)"
+        f" + CASE WHEN {n_toks} > 0 THEN {n_alpha} / {n_toks} ELSE 0.0D END"
+        f" + CASE WHEN {mean_wl} BETWEEN 2 AND 12 THEN 1.0D ELSE 0.0D END) / 4"
+    )
+
+
+def _language_sql(trimmed: str) -> str:
+    # the largest (overlap, priority) wins; 'und' outranks every language
+    # at overlap 0, so zero overlap is 'und' and ties go en > de > fr > es
+    words = f"array_distinct(split(lower({trimmed}), {_lit(_WS_RE)}))"
+    ranked = ["named_struct('s', 0, 'p', 5, 'l', 'und')"] + [
+        f"named_struct('s', size(array_intersect({words}, "
+        f"array({', '.join(_lit(w) for w in ws)}))), 'p', {4 - i}, 'l', '{lang}')"
+        for i, (lang, ws) in enumerate(_STOPWORDS.items())
+    ]
+    return f"array_max(array({', '.join(ranked)})).l"
+
+
+def _fingerprint_sql(text: str) -> str:
+    return (
+        f"md5(trim(regexp_replace(regexp_replace(lower({text}), "
+        f"{_lit(_NON_WORD_RE)}, ''), {_lit(_WS_RE)}, ' ')))"
+    )
+
 
 def tokens_col(col: str | Column) -> Column:
     """Empty/null-safe whitespace token array (`split('')` would yield
     `['']` — this maps empty text to an empty array). Stage this ONCE in a
-    projection and pass it to the signal functions below when computing
-    several of them in one scan: each function otherwise re-tokenizes per
-    use (Catalyst does no CSE across separate column trees — measured 6×
-    on the n-gram path, see decontam.exploded_gram_hashes)."""
-    c = F.col(col) if isinstance(col, str) else col
-    trimmed = F.trim(F.coalesce(c, F.lit("")))
-    return F.when(
-        F.length(trimmed) == 0, F.expr("cast(array() as array<string>)")
-    ).otherwise(F.split(trimmed, r"\s+"))
+    projection when several consumers read the tokens: a column tree
+    referenced twice is evaluated twice."""
+    trimmed = _trimmed_sql(_sql(col))
+    return F.expr(
+        f"CASE WHEN length({trimmed}) = 0 THEN cast(array() AS array<string>) "
+        f"ELSE split({trimmed}, {_lit(_WS_RE)}) END"
+    )
 
 
 def token_count(col: str | Column) -> Column:
     """Whitespace token count; empty/null-safe."""
-    c = F.col(col) if isinstance(col, str) else col
-    trimmed = F.trim(c)
-    return F.when(
-        trimmed.isNull() | (F.length(trimmed) == 0), F.lit(0)
-    ).otherwise(F.size(F.split(trimmed, r"\s+")))
+    return F.expr(_token_count_sql(_trimmed_sql(_sql(col))))
 
 
 def bpe_ish_token_count(col: str | Column) -> Column:
@@ -60,62 +126,37 @@ def quality_score(col: str | Column, tokens: Column | None = None) -> Column:
     """Composite document-quality score in [0, 1]:
 
     mean of (a) length score (saturating at 500 chars), (b) 1 - punctuation
-    ratio, (c) alpha-token ratio, (d) mean-word-length sanity (penalize
-    <2 or >12). The exact blend mirrors common curation heuristics
-    (length/punct/stopword ratios); each term is expressible in ANSI SQL so
-    the operator is oracle-checkable.
+    ratio, (c) alpha-token ratio (tokens made only of ASCII letters),
+    (d) mean-word-length sanity (penalize <2 or >12). The exact blend
+    mirrors common curation heuristics (length/punct/stopword ratios);
+    each term is expressible in ANSI SQL so the operator is
+    oracle-checkable. NULL text scores 0.5: ``least`` skips its NULL
+    length, so it gets the full length score and no penalty.
 
     ``tokens``: a pre-staged :func:`tokens_col` column — pass it when
-    computing several signals in one scan to tokenize once per row.
+    computing several signals in one scan to count the tokens once per row.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    n_chars = F.length(c)
-    len_score = F.least(n_chars / F.lit(500.0), F.lit(1.0))
-    n_punct = F.length(F.regexp_replace(c, r"[^!-/:-@\[-`{-~]", ""))
-    punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
-    toks = tokens if tokens is not None else F.split(F.trim(c), r"\s+")
-    n_toks = F.size(tokens) if tokens is not None else token_count(c)
-    n_alpha = F.size(F.filter(toks, lambda t: t.rlike("^[A-Za-z]+$")))
-    alpha_ratio = F.when(n_toks > 0, n_alpha / n_toks).otherwise(F.lit(0.0))
-    mean_wl = F.when(n_toks > 0, n_chars / n_toks).otherwise(F.lit(0.0))
-    wl_score = F.when((mean_wl >= 2) & (mean_wl <= 12), F.lit(1.0)).otherwise(F.lit(0.0))
-    return (len_score + (1 - punct_ratio) + alpha_ratio + wl_score) / 4
+    text = _sql(col)
+    trimmed = _trimmed_sql(text)
+    n_toks = (
+        f"size({_sql(tokens)})" if tokens is not None else _token_count_sql(trimmed)
+    )
+    return F.expr(_quality_sql(text, trimmed, n_toks))
 
 
-def language_id(col: str | Column, tokens: Column | None = None) -> Column:
+def language_id(col: str | Column) -> Column:
     """Stopword-overlap language heuristic: the language whose stopword
-    inventory overlaps the document's token set most; ties and zero overlap
-    → 'und' (undetermined). Deterministic and SQL-expressible.
-
-    ``tokens``: pre-staged :func:`tokens_col` column (case-preserving —
-    lowered per token here); without it the text is re-tokenized per use,
-    and this function references the token set once per language."""
-    c = F.col(col) if isinstance(col, str) else col
-    if tokens is not None:
-        toks = F.array_distinct(F.transform(tokens, F.lower))
-    else:
-        toks = F.array_distinct(F.split(F.lower(c), r"\s+"))
-    scores = [
-        (lang, F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words]))))
-        for lang, words in _STOPWORDS.items()
-    ]
-    best_score = F.greatest(*[s for _, s in scores])
-    out = F.lit("und")
-    # deterministic priority order on ties: en > de > fr > es (first match)
-    for lang, s in reversed(scores):
-        out = F.when((s == best_score) & (best_score > 0), F.lit(lang)).otherwise(out)
-    return out
+    inventory overlaps the document's distinct lower-cased token set most;
+    zero overlap → 'und' (undetermined), ties → the first of en, de, fr,
+    es. Deterministic and SQL-expressible."""
+    return F.expr(_language_sql(_trimmed_sql(_sql(col))))
 
 
 def doc_fingerprint(col: str | Column) -> Column:
     """Canonical-content fingerprint: lowercase, collapse whitespace,
     strip punctuation, md5. Two docs differing only in spacing/punct/case
     share a fingerprint — the standard exact-near-dup key."""
-    c = F.col(col) if isinstance(col, str) else col
-    canon = F.trim(
-        F.regexp_replace(F.regexp_replace(F.lower(c), r"[^a-z0-9\s]", ""), r"\s+", " ")
-    )
-    return F.md5(canon)
+    return F.expr(_fingerprint_sql(_sql(col)))
 
 
 _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -328,17 +369,25 @@ def chunk_documents(
 
 
 def add_text_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach the full metric set in one narrow projection,
-    tokenizing once (staged ``tokens_col``) for every token-based term."""
-    tk = tokens_col(text_col)
-    return (
-        df.withColumn("_tk", tk)
-        .withColumn("n_tokens", F.size(F.col("_tk")))
-        .withColumn("quality", quality_score(text_col, tokens=F.col("_tk")))
-        .withColumn("lang_pred", language_id(text_col, tokens=F.col("_tk")))
-        .withColumn("fingerprint", doc_fingerprint(text_col))
-        .drop("_tk")
-    )
+    """Convenience: attach the full metric set (``n_tokens``, ``quality``,
+    ``lang_pred``, ``fingerprint``) in one projection pair: the first
+    stages the trimmed text and its token count once, the second reads
+    them in the same formulas the column functions above return. An
+    existing column of an output's name is replaced in place."""
+    trimmed = _trimmed_sql(text_col)
+    metrics = {
+        "n_tokens": "_nt",
+        "quality": _quality_sql(text_col, "_tr", "_nt"),
+        "lang_pred": _language_sql("_tr"),
+        "fingerprint": _fingerprint_sql(text_col),
+    }
+    kept = [
+        f"{metrics.pop(c)} AS {_quoted(c)}" if c in metrics else _quoted(c)
+        for c in df.columns
+    ]
+    return df.selectExpr(
+        "*", f"{trimmed} AS _tr", f"{_token_count_sql(trimmed)} AS _nt"
+    ).selectExpr(*kept, *[f"{e} AS {c}" for c, e in metrics.items()])
 
 
 def line_dup_stats(

@@ -334,6 +334,106 @@ def test_best_of_component_survivor(spark):
     assert sorted(r.doc_id for r in out.collect()) == [1, 3, 4]
 
 
+def _degenerate_corpus(spark):
+    rows = [
+        (1, None), (2, None),  # no shingle evidence: NULL signatures
+        (3, ""), (4, ""),  # equal (padded) signatures: an exact pair
+        (5, BASE), (6, BASE),  # an exact pair
+        (7, "completely different content about spark query engines and joins"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string").withColumn(
+        "score", F.col("doc_id").cast("double")
+    )
+
+
+@pytest.mark.parametrize(
+    "survivor, want",
+    [
+        ("bucket_min", [1, 2, 3, 5, 7]),
+        ("connected_components", [1, 2, 3, 5, 7]),
+        # the larger score, here the larger id, keeps each pair
+        ("best_of_component", [1, 2, 4, 6, 7]),
+    ],
+)
+def test_minhash_null_text_docs_survive_as_singletons(spark, survivor, want):
+    """NULL-text docs carry a NULL signature. It must band nowhere:
+    xxhash64(band, NULL) hashes the band alone, which used to put every
+    NULL-text doc into one bucket per band and fail the pair verify."""
+    out = minhash_lsh_dedup(
+        _degenerate_corpus(spark), "text", "doc_id", num_perm=64, bands=16,
+        threshold=0.5, survivor=survivor, score_col="score",
+    )
+    assert sorted(r.doc_id for r in out.collect()) == want
+
+
+def test_incremental_near_dedup_null_text_docs_survive(spark):
+    from orientdb_etl_spark.functions.dedup import incremental_near_dedup
+
+    seen = spark.createDataFrame([(BASE,), (None,), ("",)], "text string")
+    out = incremental_near_dedup(
+        _degenerate_corpus(spark), seen, "text", "doc_id", num_perm=64,
+        bands=16, threshold=0.5,
+    )
+    assert sorted(r.doc_id for r in out.collect()) == [1, 2, 7]
+
+
+def test_minhash_pair_verify_runs_in_the_jvm(spark, monkeypatch):
+    """The signature UDF is the only Python stage of the verified-pair
+    plan; the pair agreement is a JVM expression."""
+    import re
+
+    from orientdb_etl_spark.functions import dedup
+
+    plans, resolve = [], dedup._drop_duplicates_by_pairs
+
+    def capture(df, pairs, *args, **kwargs):
+        plans.append(pairs._jdf.queryExecution().executedPlan().toString())
+        return resolve(df, pairs, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_drop_duplicates_by_pairs", capture)
+    minhash_lsh_dedup(_docs(spark), "text", "doc_id", num_perm=64, bands=16).collect()
+    udfs = set(re.findall(r"ArrowEvalPython \[(\w+)\(", plans[0]))
+    assert udfs == {"_sig"}
+
+
+def _driver_round_trips(build) -> int:
+    """py4j commands the calling thread sends while ``build()`` runs (the
+    gateway's garbage-collection thread is not counted)."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    me, n, send = threading.get_ident(), [0], ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            n[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = send
+    return n[0]
+
+
+def test_curate_plan_builders_stay_within_round_trip_budget(spark, tmp_path):
+    """Building (not running) the curate plans costs a few py4j round
+    trips per step, not one per column node: each is SQL text."""
+    from orientdb_etl_spark.functions.dedup import _by_node, _star_round
+
+    path = str(tmp_path / "docs.parquet")
+    _docs(spark).write.parquet(path)
+    docs = spark.read.parquet(path)
+    state = _by_node(spark.createDataFrame([(2, 1), (3, 2)], "c long, p long"))
+    for _ in range(2):  # the first build of each also warms pyspark's caches
+        metrics = _driver_round_trips(lambda: add_text_metrics(docs))
+        star = _driver_round_trips(lambda: _star_round(state, lambda df, cond: df))
+    assert metrics <= 40
+    assert star <= 120
+
+
 def test_best_of_component_requires_score(spark):
     import pytest
     from orientdb_etl_spark.functions.dedup import minhash_lsh_dedup
@@ -520,6 +620,48 @@ def test_token_count_edge_cases(spark):
     assert rows == {0: 3, 1: 0, 2: 0, 3: 0, 4: 1}
 
 
+def _reference_metrics(text):
+    """The four text-metric formulas over plain Python strings. Spark's
+    ``trim`` strips spaces only and Java's ``\\s`` is ASCII whitespace."""
+    import hashlib
+    import re
+
+    ws, stop = "[ \t\n\x0b\f\r]+", {
+        "en": {"the", "and", "of", "to", "in", "is", "that", "it", "was", "for"},
+        "de": {"der", "die", "das", "und", "ist", "von", "mit", "den", "nicht", "ein"},
+        "fr": {"le", "la", "les", "et", "est", "des", "une", "dans", "que", "pour"},
+        "es": {"el", "la", "los", "de", "que", "y", "en", "un", "por", "con"},
+    }
+    trimmed = (text or "").strip(" ")
+    toks = re.split(ws, trimmed) if trimmed else []
+    words = set(re.split(ws, trimmed.lower()))
+    overlap = {lang: len(words & sw) for lang, sw in stop.items()}
+    best = max(overlap.values())
+    lang = next(k for k, v in overlap.items() if v == best) if best else "und"
+    if text is None:  # least() skips the NULL length: a full length score
+        return len(toks), (1.0 + 1) / 4, lang, None
+    n, punct = len(text), sum(1 for ch in text if ch in _ASCII_PUNCT)
+    alpha = sum(1 for t in toks if re.fullmatch("[A-Za-z]+", t))
+    mean_wl = n / len(toks) if toks else 0.0
+    quality = (
+        min(n / 500.0, 1.0)
+        + (1 - (punct / n if n else 0.0))
+        + (alpha / len(toks) if toks else 0.0)
+        + (1.0 if 2 <= mean_wl <= 12 else 0.0)
+    ) / 4
+    canon = re.sub(ws, " ", re.sub("[^a-z0-9 \t\n\x0b\f\r]", "", text.lower()))
+    return len(toks), quality, lang, hashlib.md5(canon.strip(" ").encode()).hexdigest()
+
+
+_ASCII_PUNCT = "".join(chr(c) for c in range(33, 127) if not chr(c).isalnum())
+
+_DEGENERATE_TEXTS = [
+    None, "", "   ", "alpha\tbeta\ngamma", "one\ttwo three", "the end\n",
+    "İstanbul", "!!! ### ... $$", "der die the and", "  the quick  brown fox  ",
+    "abc\u2028 def", "Hello, World! 42",
+]
+
+
 def test_quality_and_langid(spark):
     docs = _docs(spark)
     out = add_text_metrics(docs)
@@ -529,6 +671,24 @@ def test_quality_and_langid(spark):
     assert 0.0 <= rows[0].quality <= 1.0
     assert rows[0].fingerprint == rows[1].fingerprint
     assert rows[0].n_tokens == len(BASE.split())
+    assert out.columns == ["doc_id", "text", "n_tokens", "quality", "lang_pred", "fingerprint"]
+
+    # degenerate inputs, against the pure-Python reference, both through
+    # the staged projection pair and through the single column functions
+    df = spark.createDataFrame(list(enumerate(_DEGENERATE_TEXTS)), "doc_id long, text string")
+    staged = add_text_metrics(df).select(
+        "doc_id", "n_tokens", "quality", "lang_pred", "fingerprint"
+    )
+    single = df.select(
+        "doc_id", token_count("text"), quality_score("text"), language_id("text"),
+        doc_fingerprint("text"),
+    )
+    for got in (staged, single):
+        for r in got.collect():
+            n, quality, lang, fp = _reference_metrics(_DEGENERATE_TEXTS[r[0]])
+            assert (r[1], r[3], r[4]) == (n, lang, fp), _DEGENERATE_TEXTS[r[0]]
+            assert r[2] == pytest.approx(quality, abs=1e-12)
+    assert {r.doc_id: r.lang_pred for r in staged.collect()}[8] == "en"  # the tie
 
 
 def test_fingerprint_canonicalization(spark):

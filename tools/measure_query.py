@@ -6,7 +6,11 @@ Usage:
 
 Times each query exactly as bench.py does (build DataFrame + noop-sink
 write — ``df.write.format('noop')`` computes every column of every row
-and discards it, guide §1.4 — cache cleared before each run) and, when
+and discards it, guide §1.4 — cache cleared before each run). It also
+prints, from the fastest run, the time and the py4j round trips spent
+building the DataFrame apart from the noop action: the driver-side
+plan-building cost (for a builder that runs eager jobs, such as a
+checkpointed fixpoint, those jobs count as building). When
 --plan-tag is given, writes ``plans/<round>/<query>_<TAG>.txt`` with the
 ``explain('formatted')`` output of the returned DataFrame. Honors
 $SPARK_GRAFT_SF_DIR and $SPARK_GRAFT_CPUS like bench.py. The row count
@@ -19,13 +23,35 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+import threading
 import time
+from contextlib import contextmanager
 from pathlib import Path
+
+from py4j.clientserver import ClientServerConnection
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entry  # noqa: E402
 from orientdb_etl_spark import get_spark  # noqa: E402
+
+
+@contextmanager
+def round_trips():
+    """Count the py4j commands this thread sends inside the block (the
+    gateway's garbage-collection thread is not counted)."""
+    me, n, send = threading.get_ident(), [0], ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            n[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield n
+    finally:
+        ClientServerConnection.send_command = send
 
 
 def main() -> None:
@@ -61,20 +87,26 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted"
             )
             (plan_dir / f"{name}_{args.plan_tag}.txt").write_text(txt)
-        samples = []
+        samples, builds = [], []
         for _ in range(args.runs):
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"measure: {name}")
             t0 = time.time()
-            df = fn(spark, sf_dir)
+            with round_trips() as rt:
+                df = fn(spark, sf_dir)
+            built = time.time()
             df.write.format("noop").mode("overwrite").save()
             samples.append(time.time() - t0)
+            builds.append((built - t0, rt[0]))
             spark.sparkContext.setJobDescription(None)
         n = df.count()  # informational, outside the timed region
+        best = samples.index(min(samples))
+        build_s, build_rt = builds[best]
         print(
             f"{name}: min {min(samples):.3f}s  samples "
             + "/".join(f"{s:.2f}" for s in samples)
-            + f"  ({n} rows)",
+            + f"  build {build_s:.3f}s / {build_rt} round trips"
+            + f"  action {samples[best] - build_s:.3f}s  ({n} rows)",
             flush=True,
         )
 

@@ -28,6 +28,17 @@ a compatible length, which is bounded by the short-string count, and
 losslessness requires keeping them (the untouched pigeonhole segment of
 a short string can be the empty one).
 
+The two exact token-set joins, :func:`set_similarity_join` (Jaccard)
+and :func:`containment_join`, share one private prefix-filter core:
+``_token_sets`` (distinct lower-cased whitespace tokens),
+``_rarity_ordered`` (rarest-first order by the index side's document
+frequency, and the prefix length, behind one explicit-width exchange on
+the id), ``_candidates`` (the probe prefix equi-joined on the token with
+the index tokens, deduplicated unless the prefix is one token) and
+``_verify`` (``size(array_intersect)`` on the pair's two sets). Each
+caller adds only its index side, its filters and its score. Neither
+caches anything.
+
 No counterpart in the reference (its `merge`/`link` lookups are exact
 equi-joins, OMergeTransformer.java:61-101); §2.8 extension.
 """
@@ -165,34 +176,48 @@ def fuzzy_join(
     )
 
 
-def _ordered_token_sets(
-    df: DataFrame, id_col: str, text_col: str, threshold: float
+def _token_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(_id, _set): each row's distinct lower-cased whitespace tokens;
+    NULL and blank text give no row."""
+    return df.select(
+        F.col(id_col).alias("_id"),
+        F.array_distinct(
+            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+        ).alias("_set"),
+    ).where(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0)
+
+
+def _rarity_ordered(
+    sets: DataFrame, index: DataFrame, threshold: float
 ) -> DataFrame:
-    """(_id, _ord, _s, _p): rarest-first ordered DISTINCT token sets
-    with sizes and Jaccard prefix lengths — the shared blocking input
-    of :func:`set_similarity_join` (and the scale-stress evidence
-    harness, which replays the candidate stage standalone)."""
-    base = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("_toks"),
-        )
-        .where(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0)
+    """(_id, _set, _s, _p): ``sets`` with each set's tokens sorted by
+    ascending document frequency in the ``index`` sets (a token absent
+    from them gets df 0; ties break on the token), its size ``_s`` and
+    its prefix length ``_p = _s - ceil(t·_s) + 1``."""
+    freq = (
+        index.select(F.explode("_set").alias("_tok"))
+        .groupBy("_tok")
+        .agg(F.count(F.lit(1)).alias("_df"))
     )
-    tok = base.select("_id", F.explode("_toks").alias("_tok"))
-    freq = tok.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
+    # the sets are grouped behind ONE explicit-width exchange on the id,
+    # which AQE may not coalesce: the verify joins inherit this width, and
+    # AQE would otherwise shrink the small ordered-set shuffle to one
+    # partition and run the CPU-heavy array_intersect as one task
+    # (set_sim_join at sf0.1 on 4 cores: 62 s against 14-19 s)
+    width = int(sets.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        tok.join(freq, "_tok")
+        sets.select("_id", F.explode("_set").alias("_tok"))
+        .join(freq, "_tok", "left")
+        .withColumn("_df", F.coalesce("_df", F.lit(0)))
+        .repartition(width, "_id")
         .groupBy("_id")
         .agg(
             F.expr(
                 "transform(array_sort(collect_list(struct(_df, _tok))), "
                 "x -> x._tok)"
-            ).alias("_ord")
+            ).alias("_set")
         )
-        .withColumn("_s", F.size("_ord"))
+        .withColumn("_s", F.size("_set"))
         .withColumn(
             "_p",
             F.col("_s") - F.ceil(F.lit(float(threshold)) * F.col("_s")) + 1,
@@ -200,41 +225,73 @@ def _ordered_token_sets(
     )
 
 
-def _prefix_candidates(ordered: DataFrame, threshold: float) -> DataFrame:
-    """Distinct candidate pairs (_ida < _idb) from the prefix equi-join
-    + size filter + PPJoin positional filter (Xiao et al. WWW'08) — all
-    three LOSSLESS: for the MINIMAL shared token (0-based positions i,
-    j) the true overlap is at most 1 + min(sx-(i+1), sy-(j+1)), and a
-    true pair's minimal shared token sits in both prefixes at positions
-    where that bound >= the equivalent-overlap threshold
-    ceil(t/(1+t)·(sx+sy)); keeping a pair when ANY shared prefix
-    occurrence passes therefore keeps every true pair while pruning
-    candidates whose shared tokens all sit too deep."""
-    pref = ordered.select(
+def _prefix(ordered: DataFrame) -> DataFrame:
+    """(_id, _s, _pos, _tok): each ordered set's prefix tokens with
+    their 0-based positions."""
+    return ordered.select(
         "_id",
         "_s",
-        F.posexplode(F.slice("_ord", 1, F.col("_p"))).alias("_pos", "_tok"),
+        F.posexplode(F.slice("_set", 1, F.col("_p"))).alias("_pos", "_tok"),
     )
-    l_, r_ = pref.alias("l"), pref.alias("r")
+
+
+def _candidates(
+    probe: DataFrame, index: DataFrame, keep, threshold: float
+) -> DataFrame:
+    """Candidate pairs (_ida, _idb): the probe's prefix tokens (alias
+    ``l``: _id, _s, _pos, _tok) equi-joined on the token with the
+    ``index`` tokens (alias ``r``), kept where ``keep`` holds."""
+    pref = _prefix(probe).alias("l")
+    cand = (
+        pref.join(index.alias("r"), F.col("l._tok") == F.col("r._tok"))
+        .where(keep)
+        .select(F.col("l._id").alias("_ida"), F.col("r._id").alias("_idb"))
+    )
+    # a pair collides once per shared prefix token; at t = 1 the probe
+    # prefix is one token (_s - ceil(_s) + 1) and set tokens are
+    # distinct, so the distinct would be one more pass over the stream
+    return cand.distinct() if threshold < 1.0 else cand
+
+
+def _verify(cand: DataFrame, probe: DataFrame, index: DataFrame) -> DataFrame:
+    """(_ida, _idb, _sa, _sb, _ov): each candidate with its two sets'
+    sizes and overlap ``size(array_intersect)``. The probe's ordered
+    sets join last, so the verify runs at their explicit width."""
+    fb = index.select(F.col("_id").alias("_idb"), F.col("_set").alias("_tb"))
+    fa = probe.select(F.col("_id").alias("_ida"), F.col("_set").alias("_ta"))
+    return cand.join(fb, "_idb").join(fa, "_ida").select(
+        "_ida",
+        "_idb",
+        F.size("_ta").alias("_sa"),
+        F.size("_tb").alias("_sb"),
+        F.expr("size(array_intersect(_ta, _tb))").alias("_ov"),
+    )
+
+
+def _jaccard_candidates(ordered: DataFrame, threshold: float) -> DataFrame:
+    """Jaccard candidate pairs (_ida < _idb): prefix against prefix, with
+    the size filter and the PPJoin positional filter (Xiao et al.
+    WWW'08) — both LOSSLESS: for the MINIMAL shared token (0-based
+    positions i, j) the true overlap is at most 1 + min(sx-(i+1),
+    sy-(j+1)), and a true pair's minimal shared token sits in both
+    prefixes at positions where that bound >= the equivalent-overlap
+    threshold ceil(t/(1+t)·(sx+sy)); keeping a pair when ANY shared
+    prefix occurrence passes therefore keeps every true pair while
+    pruning candidates whose shared tokens all sit too deep."""
     t = float(threshold)
     alpha = F.ceil(F.lit(t / (1.0 + t)) * (F.col("l._s") + F.col("r._s")))
     ubound = 1 + F.least(
         F.col("l._s") - (F.col("l._pos") + 1),
         F.col("r._s") - (F.col("r._pos") + 1),
     )
-    return (
-        l_.join(
-            r_,
-            (F.col("l._tok") == F.col("r._tok"))
-            & (F.col("l._id") < F.col("r._id"))
-            # size filter: J >= t implies t·|x| <= |y| <= |x|/t
-            & (F.col("r._s") * t <= F.col("l._s"))
-            & (F.col("l._s") * t <= F.col("r._s")),
-        )
-        .where(ubound >= alpha)
-        .select(F.col("l._id").alias("_ida"), F.col("r._id").alias("_idb"))
-        .distinct()
+    keep = (
+        (F.col("l._id") < F.col("r._id"))
+        # size filter: J >= t implies t·|x| <= |y| <= |x|/t
+        & (F.col("r._s") * t <= F.col("l._s"))
+        & (F.col("l._s") * t <= F.col("r._s"))
+        & (ubound >= alpha)
     )
+    return _candidates(ordered, _prefix(ordered), keep, threshold)
 
 
 def set_similarity_join(
@@ -269,34 +326,21 @@ def set_similarity_join(
     construction (the opposite of joining on raw tokens). One exchange
     for the global token counts (AQE decides broadcast vs shuffle for
     the attach — a web-scale vocabulary is not reliably
-    broadcastable), one groupBy id to assemble ordered sets, one
-    prefix-token equi-join for candidates, then verification computes
-    exact Jaccard on the pair's two full arrays (JVM
+    broadcastable), one explicit-width id exchange to assemble ordered
+    sets, one prefix-token equi-join for candidates, then verification
+    computes exact Jaccard on the pair's two full arrays (JVM
     ``array_intersect``, no UDF).
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    ordered = _ordered_token_sets(df, id_col, text_col, threshold)
-    # cache discipline (SCALE.md): the ordered-set frame feeds the prefix
-    # explode AND both sides of the verification join — uncached, the
-    # tokenize + vocabulary join + collect_list subtree runs three times
-    ordered = ordered.cache()
-    cand = _prefix_candidates(ordered, threshold)
-    full = ordered.select("_id", "_ord")
-    fa = full.select(F.col("_id").alias("_ida"), F.col("_ord").alias("_ta"))
-    fb = full.select(F.col("_id").alias("_idb"), F.col("_ord").alias("_tb"))
-    inter = F.expr("size(array_intersect(_ta, _tb))")
-    union = F.expr("size(array_union(_ta, _tb))")
-    return (
-        cand.join(fa, "_ida")
-        .join(fb, "_idb")
-        .withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select(
-            F.col("_ida").alias("id_a"),
-            F.col("_idb").alias("id_b"),
-            F.round("jaccard", round_to).alias("jaccard"),
-        )
+    sets = _token_sets(df, id_col, text_col)
+    ordered = _rarity_ordered(sets, sets, threshold)
+    pairs = _verify(_jaccard_candidates(ordered, threshold), ordered, ordered)
+    jaccard = F.col("_ov") / (F.col("_sa") + F.col("_sb") - F.col("_ov"))
+    return pairs.where(jaccard >= threshold).select(
+        F.col("_ida").alias("id_a"),
+        F.col("_idb").alias("id_b"),
+        F.round(jaccard, round_to).alias("jaccard"),
     )
 
 
@@ -617,93 +661,34 @@ def containment_join(
     document-frequency IN THE RIGHT FRAME anti-skews the join key and
     lets prefix tokens absent from R produce zero candidates.
 
-    Scale shape: one exchange for R's token frequencies, one groupBy
-    per side to assemble distinct token sets, ONE prefix-vs-postings
-    equi-join for candidates (distinct pair stream), verification as
-    JVM ``array_intersect`` on the pair's two arrays — no UDFs, no
-    cross join, and the brute-force oracle can verify equality.
+    Scale shape: one exchange for R's token frequencies, one
+    explicit-width id exchange to assemble L's ordered sets, ONE
+    prefix-vs-postings equi-join for candidates (distinct pair stream),
+    verification as JVM ``array_intersect`` on the pair's two arrays —
+    no UDFs, no cross join, and the brute-force oracle can verify
+    equality.
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-
-    def _toks(df: DataFrame, idc: str, txt: str, idout: str) -> DataFrame:
-        return (
-            df.select(
-                F.col(idc).alias(idout),
-                F.array_distinct(
-                    F.split(F.lower(F.trim(F.col(txt))), r"\s+")
-                ).alias("_toks"),
-            )
-            .where(
-                F.length(F.trim(F.coalesce(F.col(txt), F.lit("")))) > 0
-            )
-        )
-
-    lt = _toks(left, left_id, left_text, "_ll")
-    rt = _toks(right, right_id, right_text, "_rr").withColumn(
-        "_sb", F.size("_toks")
-    )
-    rpost = rt.select("_rr", F.explode("_toks").alias("_tok"))
-    rfreq = rpost.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
+    lsets = _token_sets(left, left_id, left_text)
+    rsets = _token_sets(right, right_id, right_text)
     # L's tokens ordered by R-frame rarity (absent-from-R tokens get
     # df 0 -> front of the order -> zero-candidate prefix slots)
-    lord = (
-        lt.select("_ll", F.explode("_toks").alias("_tok"))
-        .join(rfreq, "_tok", "left")
-        .withColumn("_df", F.coalesce("_df", F.lit(0)))
-        .groupBy("_ll")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(_df, _tok))), "
-                "x -> x._tok)"
-            ).alias("_ord")
-        )
-        .withColumn("_sa", F.size("_ord"))
-        .withColumn(
-            "_p",
-            F.col("_sa")
-            - F.ceil(F.lit(float(threshold)) * F.col("_sa"))
-            + 1,
-        )
-        .cache()  # feeds the prefix explode AND the verification join
+    ordered = _rarity_ordered(lsets, rsets, threshold)
+    # R's postings carry |R| so the size filter runs ON the join output,
+    # before the pair dedup
+    postings = rsets.select(
+        "_id", F.size("_set").alias("_s"), F.explode("_set").alias("_tok")
     )
-    pref = lord.select(
-        "_ll",
-        "_sa",
-        F.explode(F.slice("_ord", F.lit(1), F.col("_p"))).alias("_tok"),
-    )
-    # postings annotated with |R| so the size filter runs ON the join
-    # output, BEFORE the distinct — strictly fewer rows shuffle into the
-    # pair dedup and the separate size-lookup join disappears
-    rpost_sz = rt.select("_rr", "_sb", F.explode("_toks").alias("_tok"))
-    cand = (
-        pref.join(rpost_sz, "_tok")
-        .where(
-            F.col("_sb") >= F.ceil(F.lit(float(threshold)) * F.col("_sa"))
-        )
-        .select("_ll", "_sa", "_rr")
-    )
-    if threshold < 1.0:
-        # a pair can collide on up to |prefix| tokens, so dedup before
-        # the verify joins. At t = 1.0 the prefix is EXACTLY one token
-        # (|L| - ceil(|L|) + 1) and R's postings are distinct, so each
-        # (L, R) pair appears at most once — the distinct would be a
-        # no-op that still shuffles the whole candidate stream
-        cand = cand.distinct()
-    fa = lord.select("_ll", F.col("_ord").alias("_ta"))
-    fb = rt.select("_rr", F.col("_toks").alias("_tb"))
-    ov = F.expr("size(array_intersect(_ta, _tb))")
+    t = float(threshold)
+    keep = F.col("r._s") >= F.ceil(F.lit(t) * F.col("l._s"))
+    cand = _candidates(ordered, postings, keep, threshold)
     return (
-        cand.join(fa, "_ll")
-        .join(fb, "_rr")
-        .withColumn("_ov", ov)
-        .where(
-            F.col("_ov")
-            >= F.ceil(F.lit(float(threshold)) * F.col("_sa"))
-        )
+        _verify(cand, ordered, rsets)
+        .where(F.col("_ov") >= F.ceil(F.lit(t) * F.col("_sa")))
         .select(
-            F.col("_ll").alias("left_id"),
-            F.col("_rr").alias("right_id"),
+            F.col("_ida").alias("left_id"),
+            F.col("_idb").alias("right_id"),
             F.round(
                 F.col("_ov").cast("double") / F.col("_sa"), round_to
             ).alias("containment"),

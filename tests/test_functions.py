@@ -2591,6 +2591,8 @@ _NO_LEAK_CALLS = [
     "minhash_lsh_dedup-bucket_min",
     "minhash_lsh_dedup-connected_components",
     "minhash_lsh_dedup-best_of_component",
+    "set_similarity_join",
+    "containment_join",
 ]
 
 
@@ -2610,6 +2612,10 @@ def test_no_cached_frame_survives_the_call(spark, call):
     from orientdb_etl_spark.functions.clustering import kmeans_quantized
     from orientdb_etl_spark.functions.dedup import incremental_near_dedup
     from orientdb_etl_spark.functions.doremi import doremi_mixture
+    from orientdb_etl_spark.functions.linkage import (
+        containment_join,
+        set_similarity_join,
+    )
     from orientdb_etl_spark.functions.mleval import bradley_terry
     from orientdb_etl_spark.functions.profiling import (
         qdigest_build,
@@ -2683,6 +2689,12 @@ def test_no_cached_frame_survives_the_call(spark, call):
             )
             for rule in ("bucket_min", "connected_components", "best_of_component")
         },
+        "set_similarity_join": lambda: set_similarity_join(
+            docs, "doc_id", "text", threshold=0.2
+        ),
+        "containment_join": lambda: containment_join(
+            docs, "doc_id", "text", docs, "doc_id", "text", threshold=0.3
+        ),
     }[call]
     jjsc = spark.sparkContext._jsc
     before = {int(k) for k in jjsc.getPersistentRDDs().keySet().toArray()}

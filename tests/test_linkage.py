@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import itertools
 
+import pytest
+
 from orientdb_etl_spark.functions.linkage import fuzzy_join
 
 
@@ -96,20 +98,34 @@ def _docs(spark, rows):
 
 
 def _brute_jaccard_pairs(rows, t):
+    """Sorted (a, b, jaccard) rows of the cross join plus filter, one row
+    per pair — a list, so a duplicated output row cannot hide."""
     toks = {
         i: set(txt.lower().split())
         for i, txt in rows
         if txt is not None and txt.strip()
     }
-    out = {}
+    out = []
     ids = sorted(toks)
     for ai, a in enumerate(ids):
         for b in ids[ai + 1 :]:
             inter = len(toks[a] & toks[b])
             union = len(toks[a] | toks[b])
             if union and inter / union >= t:
-                out[(a, b)] = round(inter / union, 6)
+                out.append((a, b, round(inter / union, 6)))
     return out
+
+
+# degenerate inputs both exact joins must answer like the brute force:
+# (rows, thresholds)
+_SET_JOIN_EDGE_CASES = [
+    # three identical sets at t = 1: every pair exactly once (no distinct
+    # runs on the one-token prefixes)
+    ([(1, "x y z"), (2, "z y x"), (3, "y x z")], (1.0,)),
+    ([], (0.5, 1.0)),
+    ([(1, None), (2, "   "), (3, ""), (4, None)], (0.5, 1.0)),
+    ([(1, "a"), (2, "a"), (3, "b"), (4, "A")], (0.5, 1.0)),
+]
 
 
 def test_set_similarity_join_equals_brute_force(spark):
@@ -124,12 +140,15 @@ def test_set_similarity_join_equals_brute_force(spark):
         (6, None),
         (7, "   "),
     ]
-    for t in (0.5, 0.8, 1.0):
-        got = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in set_similarity_join(_docs(spark, rows), "id", "text", t).collect()
-        }
-        assert got == _brute_jaccard_pairs(rows, t), f"threshold {t}"
+    for case, ts in [(rows, (0.5, 0.8, 1.0)), *_SET_JOIN_EDGE_CASES]:
+        for t in ts:
+            got = sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in set_similarity_join(
+                    _docs(spark, case), "id", "text", t
+                ).collect()
+            )
+            assert got == _brute_jaccard_pairs(case, t), (case, t)
 
 
 def test_set_similarity_join_duplicate_tokens_collapse(spark):
@@ -373,9 +392,10 @@ def test_resolve_entities_end_to_end(spark):
 
 
 def _brute_containment(lrows, rrows, t):
-    """All (left, right) pairs with |L ∩ R| / |L| >= t on distinct
-    lowercased whitespace tokens — the predicate containment_join's
-    prefix filter must reproduce exactly."""
+    """Sorted (left, right, containment) rows with |L ∩ R| / |L| >= t on
+    distinct lowercased whitespace tokens — the predicate
+    containment_join's prefix filter must reproduce exactly, once per
+    pair."""
     lt = {
         i: set(txt.lower().split())
         for i, txt in lrows
@@ -386,13 +406,13 @@ def _brute_containment(lrows, rrows, t):
         for i, txt in rrows
         if txt is not None and txt.strip()
     }
-    out = {}
+    out = []
     for li, ls in lt.items():
         for ri, rs in rt.items():
             inter = len(ls & rs)
             if ls and inter / len(ls) >= t:
-                out[(li, ri)] = round(inter / len(ls), 6)
-    return out
+                out.append((li, ri, round(inter / len(ls), 6)))
+    return sorted(out)
 
 
 def test_containment_join_equals_brute_force(spark):
@@ -411,16 +431,67 @@ def test_containment_join_equals_brute_force(spark):
         (11, "a lazy dog naps in the quick shade"),
         (12, "unrelated corpus text entirely"),
     ]
-    left = _docs(spark, lrows)
-    right = spark.createDataFrame(rrows, "rid int, body string")
-    for t in (0.5, 0.75, 1.0):
-        got = {
-            (r.left_id, r.right_id): r.containment
-            for r in containment_join(
-                left, "id", "text", right, "rid", "body", threshold=t
-            ).collect()
-        }
-        assert got == _brute_containment(lrows, rrows, t), f"threshold {t}"
+    cases = [(lrows, rrows, (0.5, 0.75, 1.0))] + [
+        (rows, rows, ts) for rows, ts in _SET_JOIN_EDGE_CASES
+    ]
+    for lc, rc, ts in cases:
+        left = _docs(spark, lc)
+        right = spark.createDataFrame(rc, "rid int, body string")
+        for t in ts:
+            got = sorted(
+                (r.left_id, r.right_id, r.containment)
+                for r in containment_join(
+                    left, "id", "text", right, "rid", "body", threshold=t
+                ).collect()
+            )
+            assert got == _brute_containment(lc, rc, t), (lc, t)
+
+
+def _verify_width(out) -> int:
+    """Task count of the stage that computes the verify's
+    ``array_intersect``: collect, then walk the final adaptive plan
+    (into query stages too) to the outermost node that evaluates it."""
+    out.collect()
+    stack = [out._jdf.queryExecution().executedPlan().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if "array_intersect" in node.simpleString(1000):
+            return node.outputPartitioning().numPartitions()
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            stack.append(node.plan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    raise AssertionError("no array_intersect in the plan")
+
+
+@pytest.mark.parametrize("join", ["set_similarity_join", "containment_join"])
+def test_set_join_verify_keeps_its_width(spark, join):
+    """The verify joins run at the ordered sets' explicit width: on a
+    small input, AQE would otherwise coalesce the shuffles under them to
+    one partition and run every array_intersect in one task. Broadcast
+    is disabled to pin the shuffled regime of a corpus-sized candidate
+    stream: on toy data AQE may broadcast the candidates themselves and
+    stream the verify over the index frame's scan partitions."""
+    from orientdb_etl_spark.functions import linkage
+
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert width >= 2
+    rows = [
+        (i, " ".join(f"t{i * k % 13}" for k in range(1, 6))) for i in range(40)
+    ]
+    df = _docs(spark, rows).repartition(3)
+    out = (
+        linkage.set_similarity_join(df, "id", "text", 0.5)
+        if join == "set_similarity_join"
+        else linkage.containment_join(df, "id", "text", df, "id", "text", 0.6)
+    )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        got = _verify_width(out)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert got == width, out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_containment_join_is_asymmetric(spark):

@@ -729,11 +729,12 @@ def test_assortativity_no_cartesian(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_containment_join_equi_only_no_python(spark):
-    """The prefix-filter containment join must be pure equi-joins on JVM
+@pytest.mark.parametrize("query", ["containment_join", "set_sim_join"])
+def test_set_joins_equi_only_no_python(spark, query):
+    """The prefix-filter set joins must be pure equi-joins on JVM
     expressions: no cartesian/broadcast-NL pair enumeration, no Python
     eval — verification is array_intersect on the pair's two arrays."""
-    plan = _plan(spark, "containment_join")
+    plan = _plan(spark, query)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan

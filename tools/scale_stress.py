@@ -294,12 +294,15 @@ def main() -> None:
     # candidate stream size: the REAL blocking stages (shared helpers —
     # includes the PPJoin positional filter), not a drifting copy
     from orientdb_etl_spark.functions.linkage import (
-        _ordered_token_sets,
-        _prefix_candidates,
+        _jaccard_candidates,
+        _rarity_ordered,
+        _token_sets,
     )
 
-    ordered = _ordered_token_sets(sdocs, "doc_id", "text", 0.9).cache()
-    out["setsim_candidates"] = _prefix_candidates(ordered, 0.9).count()
+    sets = _token_sets(sdocs, "doc_id", "text")
+    out["setsim_candidates"] = _jaccard_candidates(
+        _rarity_ordered(sets, sets, 0.9), 0.9
+    ).count()
 
     # --- exact shared-span machinery on the skewed corpus --------------
     # every re-keyed copy shares ALL its 8-token windows with its base

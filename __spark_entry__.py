@@ -2312,8 +2312,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     base-31-polynomial variant (minhash_signatures_portable) emits one row
     per (doc, permutation) and the DuckDB oracle replays the identical
     fold + affine-map-min recurrence relationally. The production LSH
-    dedup path (xxhash64 / Arrow signatures + banding + verify) stays in
-    queries_all() as dedup_minhash_survivors and in bench."""
+    dedup path (one-permutation xxhash64 signatures in the JVM + banding
+    + verify) stays in queries_all() as dedup_minhash_survivors and in
+    bench."""
     from orientdb_etl_spark.functions.dedup import minhash_signatures_portable
 
     docs = _t(spark, sf_dir, "documents")
@@ -2378,9 +2379,10 @@ def _dedup_invariant_certificate(corpus: DataFrame, surv: DataFrame) -> DataFram
 
 def q_dedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dedup invariant certificate over a dup-augmented
-    corpus (production xxhash64/banded path — its signatures are not SQL-
-    mirrorable, but these invariants are, so the gate hash-pins them;
-    the exact-Jaccard oracle for pair semantics is q_ngram_jaccard)."""
+    corpus (production path: one-permutation xxhash64 signatures built in
+    the JVM, then banding — its signatures are not SQL-mirrorable, but
+    these invariants are, so the gate hash-pins them; the exact-Jaccard
+    oracle for pair semantics is q_ngram_jaccard)."""
     from orientdb_etl_spark.functions.dedup import minhash_lsh_dedup
 
     corpus = _dup_augmented_corpus(_t(spark, sf_dir, "documents"))
@@ -8653,7 +8655,7 @@ def oracle_sql() -> dict[str, str]:
         + " ELSE 'und' END"
     )
     quality = (
-        "round(("
+        "round(CASE WHEN text IS NOT NULL THEN ("
         "least(length(text) / 500.0, 1.0) "
         "+ (1 - CASE WHEN length(text) > 0 THEN "
         "length(regexp_replace(text, '[^!-/:-@\\[-`{-~]', '', 'g')) * 1.0 / length(text) ELSE 0 END) "
@@ -8661,7 +8663,7 @@ def oracle_sql() -> dict[str, str]:
         f"len(list_filter({toks}, t -> regexp_full_match(t, '[A-Za-z]+'))) * 1.0 / ({n_toks}) ELSE 0 END) "
         f"+ (CASE WHEN {n_toks} > 0 AND length(text) * 1.0 / ({n_toks}) BETWEEN 2 AND 12 "
         "THEN 1.0 ELSE 0.0 END)"
-        ") / 4, 4)"
+        ") / 4 END, 4)"
     )
     grams = (
         "list_distinct(list_transform("

@@ -484,8 +484,8 @@ def full_headline(queries: dict) -> list:
 
 
 def _prod_dedup_minhash_survivors(spark, sf_dir):
-    """Production MinHash-LSH dedup (Arrow signatures + banding + verify)
-    — what 100 TB runs. The gate twin (queries_all entry of the same
+    """Production MinHash-LSH dedup (JVM one-permutation signatures +
+    banding + verify) — what 100 TB runs. The gate twin (queries_all entry of the same
     name) wraps this in a dup-augmented invariant CERTIFICATE; bench
     times the operator, the gate hash-checks the certificate."""
     from orientdb_etl_spark.functions.dedup import minhash_lsh_dedup

@@ -7,7 +7,9 @@ are self-joins on bucket keys (AQE handles skewed buckets).
 
 Published techniques used (public literature): MinHash resemblance
 sketches (Broder, "On the resemblance and containment of documents",
-1997), banded LSH for near-duplicate candidate generation (Leskovec/
+1997), built in the JVM as one-permutation hashing (Li, Owen & Zhang,
+NIPS 2012) with rotation densification (Shrivastava & Li, ICML 2014),
+banded LSH for near-duplicate candidate generation (Leskovec/
 Rajaraman/Ullman, *Mining of Massive Datasets* ch. 3), SimHash random
 hyperplane rounding (Charikar, STOC 2002; Manku et al., WWW 2007 for
 web-scale near-dup detection).
@@ -35,7 +37,7 @@ def ensure_parallelism(
     """Spread a narrow input across the cluster before CPU-bound stages.
 
     Small single-file inputs arrive as 1-2 partitions, which serializes
-    the Arrow-batched signature stages onto 1-2 cores. At real scale the
+    the per-document signature stages onto 1-2 cores. At real scale the
     source has many splits and this is a no-op; the repartition only fires
     when the input is under-partitioned (and the shuffled payload is by
     construction small — that is why it was under-partitioned).
@@ -58,11 +60,17 @@ def ensure_parallelism(
     repartition is skipped. 0 (default) keeps the historical behavior
     for the signature-stage call sites whose per-row work is heavy
     enough to win even on tiny inputs."""
+    n = _spread_width(df, min_parts, min_bytes_per_part)
+    return df.repartition(n) if n else df
+
+
+def _spread_width(df: DataFrame, min_parts=None, min_bytes_per_part=0) -> int:
+    """The width :func:`ensure_parallelism` spreads ``df`` to; 0 to keep it."""
     spark = df.sparkSession
     target = min_parts or spark.sparkContext.defaultParallelism
     files = df.inputFiles()
     if not files:
-        return df
+        return 0
     jvm = spark._jvm  # noqa: SLF001
     hconf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
     jconf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
@@ -107,10 +115,10 @@ def ensure_parallelism(
     if cur > 0:
         est_tasks += 1
     if est_tasks >= max(2, target // 2):
-        return df
+        return 0
     if min_bytes_per_part and total < min_bytes_per_part * target:
-        return df
-    return df.repartition(target)
+        return 0
+    return target
 
 
 def _agreement_sql(left: str, right: str) -> str:
@@ -119,8 +127,8 @@ def _agreement_sql(left: str, right: str) -> str:
     pairs are joined to their signatures. A pandas UDF here was slower at
     every measured size: each of its tasks pays a fixed Python-worker
     set-up (see SCALE.md, "Python stages") that is larger than the whole
-    comparison in the JVM. NULL signatures never reach it: they band
-    nowhere (:func:`_minhash_banded`)."""
+    comparison in the JVM. Both signatures are ``num_perm`` wide: NULL
+    text has no signature row (:func:`_minhash_banded`)."""
     return (
         f"aggregate(zip_with({left}, {right}, (x, y) -> IF(x = y, 1, 0)), 0, "
         f"(s, v) -> s + v) / size({left})"
@@ -210,8 +218,8 @@ def minhash_signatures_portable(
     character codepoints, so the identical recurrence is expressible in
     any ANSI-ish SQL dialect (the DuckDB oracle mirrors it with
     list_reduce). That makes the MinHash recurrence itself
-    hash-verifiable end-to-end — the production path
-    (:func:`minhash_signatures_fast`, Arrow-batched) stays for bench/scale.
+    hash-verifiable end-to-end; the production signatures
+    (:func:`_minhash_banded`, xxhash64-based) stay for bench/scale.
 
     h(s)   = fold(chars(s), 0, (acc, c) -> acc*31 + code(c)) mod p
     sig[j] = min over distinct shingle hashes h of (h*(2j+1) + j) mod p
@@ -277,55 +285,6 @@ def minhash_signatures_portable(
     return df.join(
         sig, F.col(text_col).eqNullSafe(F.col("_t")), "left"
     ).select(*cols, out_col)
-
-
-def minhash_signatures_fast(
-    df: DataFrame,
-    text_col: str,
-    num_perm: int = 64,
-    shingle_k: int = 5,
-    out_col: str = "minhash",
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signatures via a vectorized Pandas UDF.
-
-    Rationale: Spark evaluates higher-order-function lambdas per element in
-    interpreted mode (no whole-stage codegen), which measured ~100× slower
-    than this Arrow-batched numpy path (sliding-window byte view →
-    polynomial rolling hash → num_perm affine maps, all uint64-wraparound,
-    deterministic across runs/executors). The pure-expression twin that
-    an SQL oracle can replay is :func:`minhash_signatures_portable`.
-    """
-    from pyspark.sql import types as T
-
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, 2**62, size=num_perm).astype(np.uint64) * np.uint64(2) + np.uint64(1)
-    b = rng.randint(0, 2**62, size=num_perm).astype(np.uint64)
-    k = shingle_k
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(texts: pd.Series) -> pd.Series:
-        pow_vec = np.power(
-            np.uint64(1099511628211), np.arange(k, dtype=np.uint64)
-        )  # FNV-prime powers, uint64 wraparound
-
-        def one(t: str | None):
-            if t is None:
-                return None
-            raw = t.encode("utf-8", "ignore")
-            if len(raw) < k:
-                raw = raw.ljust(k, b"\0")
-            arr = np.frombuffer(raw, dtype=np.uint8)
-            win = np.lib.stride_tricks.sliding_window_view(arr, k).astype(np.uint64)
-            base = (win * pow_vec).sum(axis=1)  # rolling polynomial hash
-            base = np.unique(base)
-            # (num_perm, n) affine maps, wraparound; min per permutation
-            sig = (base[None, :] * a[:, None] + b[:, None]).min(axis=1)
-            return sig.astype(np.int64).tolist()
-
-        return texts.map(one)
-
-    return df.withColumn(out_col, _sig(F.col(text_col)))
 
 
 def _cap_bucket_size(
@@ -570,20 +529,56 @@ def _minhash_banded(
     carry: tuple[str, ...] = (),
 ) -> tuple[DataFrame, DataFrame]:
     """Shared signature + banding stage: (signatures, exploded
-    (id, band, bucket) rows). Used by :func:`minhash_lsh_dedup` and the
-    :func:`lsh_bucket_stats` observability helper so both see the exact
-    production banding. The signatures are ``(id, minhash)`` plus the
-    ``carry`` columns. Caching the signatures is the CALLER's decision:
-    only :func:`minhash_lsh_dedup` reuses them (banding + verify join);
-    a stats-only caller caching a corpus-sized frame would pin executor
-    storage for the whole session."""
+    (id, band, bucket) rows), so :func:`minhash_lsh_dedup` and
+    :func:`lsh_bucket_stats` see the same banding. The signatures are
+    ``(id, minhash)`` plus the ``carry`` columns, one row per non-NULL
+    text. Caching them is the CALLER's decision: a stats-only caller
+    caching a corpus-sized frame would pin storage for the session.
+
+    One-permutation MinHash (Li, Owen & Zhang, NIPS 2012) in SQL text:
+    each byte ``shingle_k``-shingle is hashed once, ``h = xxhash64``; the
+    bin ``pmod(h, num_perm)`` keeps the least ``h >>> 7``, one aggregate
+    update per shingle. Rotation densification (Shrivastava & Li, ICML
+    2014) gives an empty bin the value of the next filled bin to its
+    right, wrapping around, tagged with the distance in the top 7 bits.
+    A text shorter than ``shingle_k`` bytes, ``''`` too, is one shingle,
+    so every signature is ``num_perm`` wide with no NULL component.
+
+    Every step groups by the id: a narrow input that
+    :func:`ensure_parallelism` would spread is repartitioned by the id,
+    the only exchange of the stage. A wide input keeps its partitions;
+    the bin minimum combines map-side, so at most ``num_perm`` partial
+    rows per document cross its exchange."""
+    k, n = int(shingle_k), int(num_perm)
+    keys = [id_col, *carry]
+    if width := _spread_width(df):
+        df = df.repartition(width, id_col)
+    mins = (
+        df.where(f"{text_col} IS NOT NULL")
+        .selectExpr(*keys, f"cast({text_col} AS binary) AS _b")
+        .selectExpr(*keys, "_b", f"explode(sequence(1, greatest(length(_b) - {k} + 1, 1))) AS _i")
+        .selectExpr(*keys, f"xxhash64(substring(_b, _i, {k})) AS _h")
+        .groupBy(*keys, F.expr(f"pmod(_h, {n}) AS _bin"))
+        .agg(F.expr("min(shiftrightunsigned(_h, 7)) AS _v"))
+    )
+    # the filled bins of a document in order; the first one also covers
+    # the empty bins past the last one, wrapping around
+    order = f"PARTITION BY {id_col} ORDER BY _bin"
+    sigs = (
+        mins.selectExpr(
+            *keys, "_bin", "_v",
+            f"coalesce(lag(_bin) OVER ({order}), max(_bin) OVER ({order} ROWS "
+            f"BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) - {n}) AS _prev",
+        )
+        .selectExpr(*keys, "_bin", "_v", "explode(sequence(_prev + 1, _bin)) AS _j")
+        .groupBy(*keys)
+        .agg(F.expr(
+            f"array_sort(collect_list(struct(pmod(_j, {n}) AS j, "
+            "_v | shiftleft(_bin - _j, 57) AS v))).v AS minhash"
+        ))
+    )
     rows_per_band = num_perm // bands
-    sigs = minhash_signatures_fast(
-        ensure_parallelism(df), text_col, num_perm, shingle_k
-    ).selectExpr(id_col, "minhash", *carry)
-    # a NULL signature (NULL text) bands nowhere: xxhash64(b, NULL) hashes
-    # b alone, which would put every NULL-text doc in one bucket per band
-    banded = sigs.where("minhash IS NOT NULL").selectExpr(
+    banded = sigs.selectExpr(
         id_col,
         f"posexplode(transform(sequence(0, {bands - 1}), b -> xxhash64(b, "
         f"slice(minhash, b * {rows_per_band} + 1, {rows_per_band})))) AS (band, bucket)",
@@ -636,7 +631,8 @@ def minhash_lsh_dedup(
 ) -> DataFrame:
     """Near-duplicate removal: shingle → minhash → band → bucket-join.
 
-    Scale shape: signatures are computed in one map stage; candidate pairs
+    Scale shape: signatures are built in the JVM behind one id exchange
+    (see :func:`_minhash_banded`); candidate pairs
     come from exploding ``bands`` band-hashes per row and self-joining on
     the (band, hash) bucket — only colliding rows are ever compared. A row
     is dropped iff some candidate with a smaller id estimates Jaccard ≥
@@ -1203,7 +1199,7 @@ def incremental_near_dedup(
         seen_keyed, "_stext", "_seen_key", num_perm, bands, shingle_k
     )
     # each side's signatures feed the banding, the bucket-cap passes AND
-    # the verify join — cache them once per side or the signature UDF
+    # the verify join — cache them once per side or the signature stage
     # re-runs over the full corpus for every consumer (same reuse-site
     # rule as minhash_lsh_dedup)
     sigs_new.cache()

@@ -20,7 +20,7 @@ driver-side state; the duplicated-gram set stays distributed.
 
 Oracle twin: :func:`duplicate_passage_stats` with ``portable=True`` groups
 by the gram TEXT itself (no hash), which a relational oracle can mirror
-exactly — the hash-vs-text split mirrors the minhash fast/portable twins.
+exactly — the hash-vs-text split mirrors the minhash production/portable twins.
 
 Siblings in ``functions/dedup.py``: ``shared_span_pairs`` exposes the
 corpus-level PAIR view over the same window fingerprints (which documents

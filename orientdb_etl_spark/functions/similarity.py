@@ -98,7 +98,7 @@ def add_lsh_buckets(
     previous pure-expression variant evaluated its per-plane × per-dim
     lambdas interpreted (aggregate/zip_with) — measured ~3× slower on the
     ann_lsh_topk contract query at sf0.1; wide-array math belongs on the
-    Arrow path (same call as the minhash/simhash signature stages)."""
+    Arrow path (same call as the simhash signature stage)."""
 
     @F.pandas_udf(T.IntegerType())
     def _bucket(vecs: pd.Series) -> pd.Series:

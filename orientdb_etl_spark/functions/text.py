@@ -67,12 +67,13 @@ def _quality_sql(text: str, trimmed: str, n_toks: str) -> str:
     # a whole guarded CASE, never a bare division: under ANSI arithmetic a
     # division repeated in one projection may be evaluated ahead of its guard
     mean_wl = f"CASE WHEN {n_toks} > 0 THEN length({text}) / {n_toks} ELSE 0.0D END"
+    # NULL text has no score: `least` would skip its NULL length
     return (
-        f"(least(length({text}) / 500.0D, 1.0D)"
+        f"CASE WHEN {text} IS NOT NULL THEN (least(length({text}) / 500.0D, 1.0D)"
         f" + (1 - CASE WHEN length({text}) > 0 THEN length(regexp_replace("
         f"{text}, {_lit(_PUNCT_RE)}, '')) / length({text}) ELSE 0.0D END)"
         f" + CASE WHEN {n_toks} > 0 THEN {n_alpha} / {n_toks} ELSE 0.0D END"
-        f" + CASE WHEN {mean_wl} BETWEEN 2 AND 12 THEN 1.0D ELSE 0.0D END) / 4"
+        f" + CASE WHEN {mean_wl} BETWEEN 2 AND 12 THEN 1.0D ELSE 0.0D END) / 4 END"
     )
 
 
@@ -130,8 +131,8 @@ def quality_score(col: str | Column, tokens: Column | None = None) -> Column:
     (d) mean-word-length sanity (penalize <2 or >12). The exact blend
     mirrors common curation heuristics (length/punct/stopword ratios);
     each term is expressible in ANSI SQL so the operator is
-    oracle-checkable. NULL text scores 0.5: ``least`` skips its NULL
-    length, so it gets the full length score and no penalty.
+    oracle-checkable. NULL text scores NULL, so no quality floor keeps
+    it.
 
     ``tokens``: a pre-staged :func:`tokens_col` column — pass it when
     computing several signals in one scan to count the tokens once per row.

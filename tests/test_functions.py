@@ -7,7 +7,6 @@ from orientdb_etl_spark.functions.dedup import (
     embedding_near_dedup,
     exact_dedup,
     minhash_lsh_dedup,
-    minhash_signatures_fast,
     ngram_jaccard_pairs,
     simhash_dedup,
 )
@@ -58,14 +57,69 @@ def test_minhash_drops_near_dups(spark):
     assert {3, 4} <= set(ids)
 
 
+def _signatures(df, num_perm=64):
+    from orientdb_etl_spark.functions.dedup import _minhash_banded
+
+    sigs, _ = _minhash_banded(df, "text", "doc_id", num_perm, 16, 5)
+    return {r.doc_id: r.minhash for r in sigs.collect()}
+
+
 def test_minhash_signature_shape_and_determinism(spark):
-    docs = _docs(spark)
-    s1 = minhash_signatures_fast(docs, "text").collect()
-    s2 = minhash_signatures_fast(docs, "text").collect()
-    sig = {r.doc_id: r.minhash for r in s1}
-    assert len(sig[0]) == 64
+    rows = [
+        (5, ""), (6, "abc"), (7, "İstanbul ünïcödé 日本語 текст"), (8, None),
+    ]
+    docs = _docs(spark).unionByName(
+        spark.createDataFrame(rows, "doc_id long, text string")
+    )
+    sig = _signatures(docs)
+    # full width and no NULL component, degenerate texts included: '' and
+    # a text shorter than k are one shingle each; NULL text has no row
+    assert sorted(sig) == [0, 1, 2, 3, 4, 5, 6, 7]
+    for v in sig.values():
+        assert len(v) == 64 and None not in v
     assert sig[0] == sig[1]  # identical texts -> identical signatures
-    assert {r.doc_id: r.minhash for r in s2} == sig  # run-to-run determinism
+    assert len({tuple(v) for v in sig.values()}) == 7
+    assert _signatures(docs) == sig  # run-to-run determinism
+
+
+def _byte_shingles(text, k=5):
+    b = text.encode("utf-8")
+    return {b[i:i + k] for i in range(max(len(b) - k + 1, 1))}
+
+
+def test_minhash_signature_agreement_estimates_byte_shingle_jaccard(spark):
+    """On a seeded corpus of edited variants, the fraction of equal
+    signature components tracks the exact Jaccard of the byte 5-shingle
+    sets over every pair with J >= 0.2: no bias beyond 0.02 on average
+    and no pair off by more than 0.2."""
+    import random
+
+    rng = random.Random(11)
+    vocab = ["".join(rng.choices("abcdefghijklmnopqrstuvwxyz", k=rng.randint(2, 9)))
+             for _ in range(300)]
+    texts = []
+    for _ in range(40):
+        base = rng.choices(vocab, k=rng.randint(30, 60))
+        texts.append(" ".join(base))
+        for _ in range(3):
+            w = list(base)
+            for pos in rng.sample(range(len(w)), rng.randint(1, 15)):
+                w[pos] = rng.choice(vocab)
+            texts.append(" ".join(w))
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    sig = _signatures(df, num_perm=128)
+    shingles = [_byte_shingles(t) for t in texts]
+    errors = []
+    for i in range(len(texts)):
+        for j in range(i + 1, len(texts)):
+            a, b = shingles[i], shingles[j]
+            exact = len(a & b) / len(a | b)
+            if exact >= 0.2:
+                agree = sum(x == y for x, y in zip(sig[i], sig[j])) / 128
+                errors.append(agree - exact)
+    assert len(errors) >= 200
+    assert abs(sum(errors) / len(errors)) <= 0.02
+    assert max(abs(e) for e in errors) <= 0.2
 
 
 def test_simhash_dedup(spark):
@@ -378,22 +432,40 @@ def test_incremental_near_dedup_null_text_docs_survive(spark):
 
 
 def test_minhash_pair_verify_runs_in_the_jvm(spark, monkeypatch):
-    """The signature UDF is the only Python stage of the verified-pair
-    plan; the pair agreement is a JVM expression."""
-    import re
-
+    """The MinHash dedups have no Python stage: the signatures, the
+    banding and the pair agreement are all JVM expressions."""
     from orientdb_etl_spark.functions import dedup
 
-    plans, resolve = [], dedup._drop_duplicates_by_pairs
+    plans, banded, resolve = [], dedup._minhash_banded, dedup._drop_duplicates_by_pairs
 
-    def capture(df, pairs, *args, **kwargs):
-        plans.append(pairs._jdf.queryExecution().executedPlan().toString())
+    def plan(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+
+    def capture_banded(*args, **kwargs):
+        out = banded(*args, **kwargs)
+        for df in out:
+            plan(df)
+        return out
+
+    def capture_pairs(df, pairs, *args, **kwargs):
+        plan(pairs)
         return resolve(df, pairs, *args, **kwargs)
 
-    monkeypatch.setattr(dedup, "_drop_duplicates_by_pairs", capture)
-    minhash_lsh_dedup(_docs(spark), "text", "doc_id", num_perm=64, bands=16).collect()
-    udfs = set(re.findall(r"ArrowEvalPython \[(\w+)\(", plans[0]))
-    assert udfs == {"_sig"}
+    monkeypatch.setattr(dedup, "_minhash_banded", capture_banded)
+    monkeypatch.setattr(dedup, "_drop_duplicates_by_pairs", capture_pairs)
+    docs = _docs(spark)
+    for out in (
+        dedup.minhash_lsh_dedup(docs, "text", "doc_id", num_perm=64, bands=16),
+        dedup.incremental_near_dedup(docs, docs, "text", "doc_id", num_perm=64),
+        dedup.lsh_bucket_stats(docs, "text", "doc_id"),
+    ):
+        out.collect()
+        plan(out)
+    # each call's signature and banded frames (two sides for the
+    # incremental dedup), minhash_lsh_dedup's verified pairs, each result
+    assert len(plans) == (2 + 1 + 1) + (4 + 1) + (2 + 1)
+    for p in plans:
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
 def _driver_round_trips(build) -> int:
@@ -638,8 +710,8 @@ def _reference_metrics(text):
     overlap = {lang: len(words & sw) for lang, sw in stop.items()}
     best = max(overlap.values())
     lang = next(k for k, v in overlap.items() if v == best) if best else "und"
-    if text is None:  # least() skips the NULL length: a full length score
-        return len(toks), (1.0 + 1) / 4, lang, None
+    if text is None:
+        return len(toks), None, lang, None
     n, punct = len(text), sum(1 for ch in text if ch in _ASCII_PUNCT)
     alpha = sum(1 for t in toks if re.fullmatch("[A-Za-z]+", t))
     mean_wl = n / len(toks) if toks else 0.0

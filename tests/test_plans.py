@@ -165,6 +165,25 @@ def test_minhash_bucket_guard_broadcasts_overfull_list(spark):
     assert plan.count("Exchange") == plan.count("BroadcastExchange")
 
 
+def test_minhash_signatures_of_a_single_file_take_one_exchange(spark, tmp_path):
+    """A one-file input is spread by the id, and that one exchange serves
+    the bin-minimum aggregate, the densifying window and the per-document
+    collect of the signature stage."""
+    from orientdb_etl_spark.functions.dedup import _minhash_banded
+
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(i, f"some text number {i} with shared tokens") for i in range(10)],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert len(docs.inputFiles()) == 1
+    sigs, _ = _minhash_banded(docs, "text", "doc_id", 64, 16, 5)
+    plan = sigs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1
+    assert "Exchange hashpartitioning(doc_id" in plan
+
+
 def test_q4_semi_join_no_post_dedup(spark):
     """The EXISTS shape must compile to a left-semi join (no distinct /
     aggregate pass over the many-matches-per-order join output)."""
